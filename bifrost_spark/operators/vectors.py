@@ -73,10 +73,6 @@ def norm2_fast(a: Column) -> Column:
     )
 
 
-def with_norm(df: DataFrame, vec_col: str, out: str = "nrm2") -> DataFrame:
-    return df.withColumn(out, norm2(F.col(vec_col)))
-
-
 def scale_by(vec: Column, divisor: Column, round_dp: int | None = None) -> Column:
     """Element-wise ``vec / divisor`` with the divisor evaluated ONCE per row.
 

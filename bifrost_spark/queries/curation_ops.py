@@ -996,30 +996,11 @@ def _sql_u4(expr: str, slot: int) -> str:
     return f"(CAST({val} AS DOUBLE) / 65536.0)"
 
 
-def _u4_col(h, slot: int):
-    """Spark twin of :func:`_sql_u4` over a (shared) md5 Column: conv()
-    parses the same 4 hex digits in one JVM call — a different SPELLING
-    of the identical integer (values are compared, spellings are not;
-    DuckDB lacks a hex-string→int cast, so its side keeps the ascii
-    decode)."""
-    return (
-        F.conv(F.substring(h, slot * 4 + 1, 4), 16, 10).cast("int").cast("double")
-        / F.lit(65536.0)
-    )
-
-
 def _sql_pois(u: str) -> str:
     cases = " ".join(
         f"WHEN {u} < {c} THEN {k}" for k, c in enumerate(_POIS_CDF)
     )
     return f"(CASE {cases} ELSE 6 END)"
-
-
-def _pois_col(u):
-    w = F.lit(6)
-    for k, c in reversed(list(enumerate(_POIS_CDF))):
-        w = F.when(u < float(c), F.lit(k)).otherwise(w)
-    return w
 
 
 # one md5 string per (row, replicate-GROUP): group = r // 8, slot = r % 8

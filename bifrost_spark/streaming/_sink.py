@@ -1,26 +1,47 @@
-"""Shared replay-idempotent micro-batch sink (drift monitor, fuzzy dedup).
+"""Shared replay-idempotent micro-batch sink for the streaming monitors,
+plus the one Hadoop FileSystem lookup of the streaming layer.
 
-Output is PARTITIONED by batch_id and each emit dynamically overwrites
-ONLY its own partition, so a crash between sink write and checkpoint
-commit re-runs the batch into the same batch_id=N directory instead of
-appending a duplicate (exactly-once at the sink, no reader-side dedup).
+Users of the sink: drift_monitor, centroid_drift, sketch_drift and
+fuzzy_dedup (stateless per batch), and sprt_monitor, cusum_monitor,
+page_hinkley and gst_monitor (state carried in their own output).
+Users of ``hadoop_fs``: archive's offset-named writer, compact,
+manifest_compact, upsert and ``output_exists`` below.
+
+Replay contract (the replayable-source plus idempotent-sink recipe of
+Structured Streaming, SIGMOD 2018; the reference's "same first offset →
+same key" upload, s3.clj:15-20):
+
+* each non-empty micro-batch N is written into ``output/batch_id=N`` with
+  a dynamic partition overwrite, so a crash between sink write and
+  checkpoint commit re-runs the batch into the same directory instead of
+  appending a duplicate (exactly-once at the sink, no reader-side dedup);
+* a monitor that carries state in its output reads ONLY partitions with
+  ``batch_id < N`` (``prior_partitions``), so a re-run of batch N never
+  reads its own half-written output and recomputes the same rows;
+* a missing output path is the first batch and the only read failure
+  that may reset a walk to its zero state; any other read error (FS
+  fault, corrupt file) propagates so the micro-batch fails and retries
+  instead of silently restarting the walk;
+* batches arrive in strictly increasing day order; a batch reaching back
+  to an already-emitted day is a backfill correction and is rejected
+  (``guard_order``) rather than corrupting the walk.
 
 Idempotence depends on DYNAMIC partition overwrite.  The per-write
 ``partitionOverwriteMode`` option is authoritative on Spark ≥ 2.4's v1
 file source, but some builds/confs resolve only the SESSION conf — so the
 session conf is set to dynamic for the duration of the write and RESTORED
 afterwards (a leaked dynamic default would silently change unrelated
-static-overwrite writes elsewhere in the session — review finding; the
-previous set-then-read "assert" could never fire because it read back the
-value it had just set).
+static-overwrite writes elsewhere in the session).
 """
 
 from __future__ import annotations
 
 import threading
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 _MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
 
@@ -31,6 +52,13 @@ _MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
 # per-write option stays authoritative on the v1 file source — the session
 # conf is only the fallback — but the fallback must not race either.
 _MODE_LOCK = threading.Lock()
+
+
+def hadoop_fs(spark, path: str):
+    """The Hadoop FileSystem owning ``path`` (scheme-portable: file://,
+    s3a://, abfss://), resolved through the session's Hadoop conf."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
 def write_batch_partition(df: DataFrame, batch_id: int, output_path: str) -> None:
@@ -59,29 +87,18 @@ def write_batch_partition(df: DataFrame, batch_id: int, output_path: str) -> Non
 
 
 def output_exists(spark, output_path: str) -> bool:
-    """Explicit existence probe for an output-carried-state monitor's own
-    output directory (sprt_monitor, cusum_monitor, page_hinkley — one
-    public home for the family's read contract, VERDICT r9 item 4).
+    """Existence probe for a monitor's own output directory.
 
-    The missing-path case (first batch ever) is the ONLY read failure
-    that may legally reset a cumulative walk to its zero state; any
-    other read error (transient FS fault, corrupt file) must propagate
-    so the micro-batch fails and retries instead of silently restarting
-    the walk and persisting wrong rows (ADVICE r8).
-
-    The primary probe asks the Hadoop FileSystem directly via the
-    session JVM — available on CLASSIC PySpark sessions (the grading
-    driver and every test here).  On Spark Connect sessions ``_jvm`` is
-    unavailable, so the fallback is a schema-only ``spark.read.parquet``
-    probe that treats ONLY the PATH_NOT_FOUND AnalysisException as
-    "missing" and re-raises everything else — same reset-vs-retry
-    contract, no JVM internals (ADVICE r9).
+    Classic sessions ask the Hadoop FileSystem directly.  On Spark Connect
+    sessions ``_jvm`` is unavailable, so the fallback is a schema-only
+    ``spark.read.parquet`` probe that treats ONLY the PATH_NOT_FOUND
+    AnalysisException as "missing" and re-raises everything else — same
+    reset-vs-retry contract, no JVM internals (ADVICE r9).
     """
     jvm = getattr(spark, "_jvm", None)
     if jvm is not None:
         path = jvm.org.apache.hadoop.fs.Path(output_path)
-        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(path))
+        return bool(hadoop_fs(spark, output_path).exists(path))
     from pyspark.errors import AnalysisException
 
     try:
@@ -93,3 +110,65 @@ def output_exists(spark, output_path: str) -> bool:
         ):
             return False
         raise
+
+
+def prior_partitions(spark, output_path: str, batch_id: int) -> DataFrame | None:
+    """The monitor's output rows with ``batch_id`` strictly below the
+    current batch, or None before the first batch has written anything."""
+    if not output_exists(spark, output_path):
+        return None
+    return spark.read.parquet(output_path).filter(F.col("batch_id") < batch_id)
+
+
+def guard_order(
+    monitor: str,
+    batch_id: int,
+    update: DataFrame,
+    last_day,
+    first_day=None,
+) -> DataFrame:
+    """Reject a batch whose first day does not strictly follow
+    ``last_day``, the last day already emitted (None: nothing emitted):
+    appending it would emit non-monotone, duplicate-day cumulative rows.
+    A replay of batch N passes, since ``last_day`` comes from the
+    ``batch_id < N`` partitions only.
+
+    Without a precomputed ``first_day`` the update is pinned with
+    ``localCheckpoint`` (it is consumed twice: this min and the sink
+    write) and its ``min(day)`` collected.  Returns the frame to write."""
+    if last_day is None:
+        return update
+    if first_day is None:
+        update = update.localCheckpoint(eager=True)
+        first_day = update.agg(F.min("day").alias("d")).collect()[0]["d"]
+    if first_day is not None and first_day <= last_day:
+        raise ValueError(
+            f"{monitor}: batch {batch_id} contains day {first_day} <= last "
+            f"emitted day {last_day}; late rows are backfill corrections, "
+            "not monitor updates (ordering contract)"
+        )
+    return update
+
+
+def start_batch_sink(
+    stream: DataFrame,
+    output_path: str,
+    checkpoint_path: str,
+    update: Callable[[DataFrame, int], DataFrame | None],
+) -> StreamingQuery:
+    """Run ``stream`` into the batch_id-partitioned sink: each non-empty
+    micro-batch's ``update(batch, batch_id)`` frame is written to
+    ``output_path/batch_id=N`` (a None frame writes nothing)."""
+
+    def _emit(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        out = update(batch, batch_id)
+        if out is not None:
+            write_batch_partition(out, batch_id, output_path)
+
+    return (
+        stream.writeStream.foreachBatch(_emit)
+        .option("checkpointLocation", checkpoint_path)
+        .start()
+    )

@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from bifrost_spark.streaming._sink import hadoop_fs
+
 # The Kafka-source column contract (subset we archive).  When reading from a
 # real Kafka cluster these come from format("kafka") verbatim.
 MESSAGE_SCHEMA = StructType(
@@ -218,10 +220,8 @@ def start_offset_named_archive(spark: SparkSession, cfg: ArchiveConfig) -> Strea
             .parquet(staging)
         )
 
-        jvm = spark_b._jvm
-        hconf = spark_b._jsc.hadoopConfiguration()
-        HPath = jvm.org.apache.hadoop.fs.Path
-        fs = HPath(staging).getFileSystem(hconf)
+        HPath = spark_b._jvm.org.apache.hadoop.fs.Path
+        fs = hadoop_fs(spark_b, staging)
 
         def move_leaf(key: tuple) -> None:
             topic, partition, first_offset = key

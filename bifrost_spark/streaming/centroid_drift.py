@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bifrost_spark.queries.curation_ops import label_centroids
+from bifrost_spark.streaming._sink import start_batch_sink
 
 
 def fit_reference_centroids(df: DataFrame) -> DataFrame:
@@ -82,18 +83,9 @@ def start_centroid_drift(
     checkpoint_path: str,
 ) -> StreamingQuery:
     """Start the monitor: every micro-batch emits its per-label drift rows
-    to a batch_id-partitioned parquet sink (dynamic overwrite →
-    replay-idempotent, the shared _sink protocol)."""
+    to the batch_id-partitioned replay-idempotent sink."""
 
-    def _emit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from bifrost_spark.streaming._sink import write_batch_partition
-
-        write_batch_partition(batch_centroid_drift(batch, ref), batch_id, output_path)
-
-    return (
-        stream.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return start_batch_sink(
+        stream, output_path, checkpoint_path,
+        lambda batch, _: batch_centroid_drift(batch, ref),
     )

@@ -45,6 +45,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from bifrost_spark.streaming._sink import hadoop_fs
+
 _LEAF_RE = re.compile(r"^(\d{10})\.parquet$")
 _TMP_SUFFIX = ".compact-tmp"
 _MANIFEST_SUFFIX = ".compact-manifest"
@@ -57,16 +59,6 @@ class CompactStats:
     leaves_after: int = 0
     bins_written: int = 0
     bytes_rewritten: int = 0
-
-
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-
-def _dir_bytes(fs, jvm, jpath) -> int:
-    return fs.getContentSummary(jpath).getLength()
 
 
 def _write_manifest(fs, jvm, mpath, names: list[str]) -> None:
@@ -122,7 +114,7 @@ def compact_archive(
     exceed ``target_bytes``; single-leaf bins are left untouched.  Returns
     counts for observability (the listener/metrics analog for maintenance).
     """
-    fs, jvm = _fs_for(spark, archive_root)
+    fs, jvm = hadoop_fs(spark, archive_root), spark._jvm
     stats = CompactStats()
     glob_pat = jvm.org.apache.hadoop.fs.Path(archive_root + "/*/*/partition=*")
     for part_status in fs.globStatus(glob_pat) or []:
@@ -133,10 +125,13 @@ def compact_archive(
         _recover_orphans(fs, jvm, part_dir)
         leaves = []  # (first_offset, name, bytes)
         for st in fs.listStatus(part_dir):
+            # a leaf is the writer's single parquet file or a directory
+            # this job wrote for an earlier bin
             m = _LEAF_RE.match(st.getPath().getName())
-            if m and st.isDirectory():
+            if m:
                 leaves.append(
-                    (int(m.group(1)), st.getPath().getName(), _dir_bytes(fs, jvm, st.getPath()))
+                    (int(m.group(1)), st.getPath().getName(),
+                     fs.getContentSummary(st.getPath()).getLength())
                 )
         leaves.sort()
         stats.leaves_before += len(leaves)

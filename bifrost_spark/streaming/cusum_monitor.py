@@ -10,15 +10,14 @@ State device: the CUSUM is inherently CUMULATIVE — day t's (S+, S−)
 need day t−1's.  Instead of a state store, the state lives in the
 monitor's OWN OUTPUT: each emit writes per-day rows carrying BOTH the
 9-dp rounded readouts (day_mean, s_pos, s_neg, alarms — the
-q_cusum_drift output contract) and the RAW doubles sp_exact / sn_exact,
-partitioned by batch_id; the next batch recovers its offsets from the
-max-day row over partitions with ``batch_id < N`` only.  Raw doubles
-round-trip parquet losslessly, so the continued walk is BIT-IDENTICAL
-to a single-shot walk — which is what the multi-batch differential gate
-asserts with set equality, not tolerance.  The ``batch_id < N``
-restriction is what makes replay exactly-once (a re-run of batch N
-never reads its own half-written output; the dynamic-overwrite sink
-rewrites batch_id=N in place).
+q_cusum_drift output contract) and the RAW doubles sp_exact / sn_exact;
+the next batch recovers its offsets from the max-day row of the prior
+partitions.  Raw doubles round-trip parquet losslessly, so the continued
+walk is BIT-IDENTICAL to a single-shot walk — which is what the
+multi-batch differential gate asserts with set equality, not tolerance.
+Replay, first-batch and ordering rules (each micro-batch carries whole
+days, later than the last emitted one) are the shared sink's
+(streaming/_sink.py).
 
 Baseline: (mu0, s0) are fitted ONCE from a standing batch frame (the
 first week) by ``fit_cusum_baseline`` — the SAME cusum_daily_frame /
@@ -26,11 +25,6 @@ cusum_baseline_frames spelling the batch query uses — and collected to
 two Python floats the caller passes in: two driver-held scalars, no
 executor-resident state to lose (the sketch_drift ADVICE-r8 lesson,
 taken one step further).
-
-Ordering contract (the sprt_monitor guard): each micro-batch carries
-whole days and batches arrive in nondecreasing day order; a batch whose
-earliest day does not strictly follow the last emitted day is a
-backfill correction and is REJECTED rather than corrupting the walk.
 
 Determinism mirrors q_cusum_drift: daily means are 12-dp decimal-exact,
 the recursion is the shared cusum_walk IEEE add/max chain continued
@@ -48,6 +42,11 @@ from bifrost_spark.queries.monitor_ops import (
     cusum_daily_frame,
     cusum_decisions,
     cusum_walk,
+)
+from bifrost_spark.streaming._sink import (
+    guard_order,
+    prior_partitions,
+    start_batch_sink,
 )
 
 
@@ -87,17 +86,10 @@ def batch_cusum_update(
 def _prior_state(
     spark, output_path: str, batch_id: int
 ) -> tuple[float, float, object]:
-    """(sp, sn, max_day) from the max-day row over output partitions
-    with batch_id strictly below the current one.  Only the missing-path
-    first-batch case resets to (0, 0, None); any other read error
-    propagates so the micro-batch retries (the sprt_monitor ADVICE-r8
-    contract)."""
-    from bifrost_spark.streaming._sink import output_exists
-
-    if not output_exists(spark, output_path):
-        return 0.0, 0.0, None
-    prior = spark.read.parquet(output_path).filter(F.col("batch_id") < batch_id)
-    row = prior.orderBy(F.desc("day")).limit(1).collect()
+    """(sp, sn, max_day) from the max-day row of the prior partitions
+    (``_sink.prior_partitions``); (0, 0, None) before the first batch."""
+    prior = prior_partitions(spark, output_path, batch_id)
+    row = [] if prior is None else prior.orderBy(F.desc("day")).limit(1).collect()
     if not row:
         return 0.0, 0.0, None
     return float(row[0]["sp_exact"]), float(row[0]["sn_exact"]), row[0]["day"]
@@ -115,28 +107,9 @@ def start_cusum_monitor(
     (S+, S−), and emits per-day decision+state rows to the
     batch_id-partitioned replay-idempotent sink."""
 
-    def _emit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from bifrost_spark.streaming._sink import write_batch_partition
-
-        spark = batch.sparkSession
-        sp0, sn0, max_day = _prior_state(spark, output_path, batch_id)
+    def _update(batch: DataFrame, batch_id: int) -> DataFrame:
+        sp0, sn0, max_day = _prior_state(batch.sparkSession, output_path, batch_id)
         update = batch_cusum_update(batch, mu0, s0, sp0, sn0)
-        if max_day is not None:
-            update = update.localCheckpoint(eager=True)
-            min_day = update.agg(F.min("day").alias("d")).collect()[0]["d"]
-            if min_day is not None and min_day <= max_day:
-                raise ValueError(
-                    f"cusum_monitor: batch {batch_id} contains day "
-                    f"{min_day} <= last emitted day {max_day}; late days "
-                    "are backfill corrections, not monitor updates "
-                    "(ordering contract)"
-                )
-        write_batch_partition(update, batch_id, output_path)
+        return guard_order("cusum_monitor", batch_id, update, max_day)
 
-    return (
-        stream.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
+    return start_batch_sink(stream, output_path, checkpoint_path, _update)

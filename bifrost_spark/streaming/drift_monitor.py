@@ -5,9 +5,9 @@ This is the production deployment shape of ``q_psi_drift``
 (queries/pipeline_ops.py): the reference distribution is fitted ONCE from a
 batch frame (yesterday's accepted corpus, a golden sample) and folded into
 plan literals; every micro-batch then reduces to its own ≤n_bins histogram
-inside ``foreachBatch`` and emits one PSI row to a sink the alerting layer
-tails.  Continuous ingest monitoring — "did the crawler/upstream break
-tonight?" — is exactly the op a 100 TB daily pipeline runs on every drop.
+and emits one PSI row to a sink the alerting layer tails.  Continuous
+ingest monitoring — "did the crawler/upstream break tonight?" — is
+exactly the op a 100 TB daily pipeline runs on every drop.
 
 Scale shape: the per-batch work is one map-side-combined aggregate to
 ``n_bins`` rows; the reference model is ``n_bins`` longs of driver state
@@ -18,9 +18,8 @@ state store, so the monitor restarts cleanly from any checkpoint.
 Determinism mirrors q_psi_drift: integer bin counts, add-half-smoothed
 probabilities as single divisions of integer-valued doubles, 12-dp-rounded
 log addends summed in DECIMAL — a retried micro-batch emits the identical
-PSI row, and the sink enforces exactly-once by batch_id-partitioned
-dynamic-partition overwrite (a replayed batch rewrites its own partition;
-no reader-side dedup needed).
+PSI row, and the batch_id-partitioned sink (streaming/_sink.py) makes
+replay exactly-once.
 """
 
 from __future__ import annotations
@@ -30,6 +29,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from bifrost_spark.streaming._sink import start_batch_sink
 
 #: PSI above this is the conventional "population has shifted" alarm.
 PSI_ALERT = 0.25
@@ -147,19 +148,7 @@ def monitor_stream(
     mixes schemas with the ``batch_id=N`` directory layout for readers.
     Point an upgraded monitor at a CLEAN ``output_path``."""
 
-    def _emit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        # Replay-idempotent batch_id-partitioned dynamic overwrite — the
-        # shared sink helper also sets (and restores) the session-level
-        # overwrite mode so builds that resolve only the session conf
-        # still overwrite dynamically (ADVICE r5).
-        from bifrost_spark.streaming._sink import write_batch_partition
-
-        write_batch_partition(batch_psi(batch, col, ref), batch_id, output_path)
-
-    return (
-        stream.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return start_batch_sink(
+        stream, output_path, checkpoint_path,
+        lambda batch, _: batch_psi(batch, col, ref),
     )

@@ -11,21 +11,19 @@ standing corpus must not rebuild anything per trigger.  The split here:
   artifact.  Write it to parquet (bucketed by (band, bucket) at scale)
   and refresh it on the corpus's own compaction cadence — the stream
   never touches corpus text.
-* **probe (per micro-batch)** — :func:`start_fuzzy_dedup` runs
-  foreachBatch: each batch's signatures are computed in-flight, probe the
+* **probe (per micro-batch)** — :func:`start_fuzzy_dedup` runs a
+  per-batch sink: each batch's signatures are computed in-flight, probe the
   static index on the 16-byte (band, bucket) keys, and every batch doc is
   emitted with its verdict — ``dup_of``/``est_jaccard`` for near-dups
   over the threshold, NULLs for admitted docs (routing, not silent
-  dropping: downstream decides to quarantine or keep).  foreachBatch
+  dropping: downstream decides to quarantine or keep).  Per batch
   because signature building is an aggregation (per-doc min over seeds)
   feeding a join — not expressible in a single continuous plan — the
   same per-batch discipline as ``drift_monitor.py``.
 
 State: NONE in the state store — the index is an external, versioned
-artifact.  Replay idempotence is by construction: the sink is
-batch_id-partitioned with dynamic-partition overwrite (the drift-monitor
-device), so a crash between sink write and checkpoint commit rewrites the
-same batch_id partition instead of appending duplicates.
+artifact.  Replay idempotence is by construction: the batch_id-partitioned
+sink (streaming/_sink.py) rewrites a replayed batch's own partition.
 
 Parity: the per-batch verdicts are the batch operator's semantics — the
 test gates the streaming output against the q_dedup_incremental_minhash
@@ -51,6 +49,7 @@ from bifrost_spark.operators.dedup import (
 #: Shared with the batch twin via the canonical family constants
 #: (operators/dedup.py) and llm_dedup's threshold — one retune point.
 from bifrost_spark.queries.llm_dedup import JACCARD_THRESHOLD as DUP_THRESHOLD
+from bifrost_spark.streaming._sink import start_batch_sink
 
 
 def build_signature_index(
@@ -132,20 +131,9 @@ def start_fuzzy_dedup(
     threshold: float = DUP_THRESHOLD,
 ) -> StreamingQuery:
     """Start the probe flow: every incoming doc is written with its
-    verdict to a batch_id-partitioned parquet sink (dynamic overwrite →
-    replay-idempotent, same protocol as the drift monitor)."""
+    verdict to the batch_id-partitioned replay-idempotent sink."""
 
-    def _emit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from bifrost_spark.streaming._sink import write_batch_partition
-
-        write_batch_partition(
-            probe_batch(batch, index, threshold=threshold), batch_id, output_path
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return start_batch_sink(
+        stream, output_path, checkpoint_path,
+        lambda batch, _: probe_batch(batch, index, threshold=threshold),
     )

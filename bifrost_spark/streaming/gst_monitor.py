@@ -10,24 +10,19 @@ of the carry spectrum): each emit writes the full K-row decision table
 carrying BOTH the cumulative readouts (n/conv per arm, z, boundaries,
 reject flags — the q_group_sequential output contract) and this batch's
 per-look integer increments (inc_n_a …), plus the anchor day (the
-experiment start, fixed by the FIRST batch) — partitioned by batch_id.
-The next batch recovers its per-(variant, look) cumulative cells by
-summing the increments over partitions with ``batch_id < N`` only; that
-restriction is what makes replay exactly-once (a re-run of batch N
-never reads its own half-written output; the dynamic-overwrite sink
-rewrites batch_id=N in place).  Integer sums recover EXACTLY, so the
-continued table is identical to the single-shot one — the multi-batch
-differential gate asserts set equality, not tolerance.
+experiment start, fixed by the FIRST batch).  The next batch recovers
+its per-(variant, look) cumulative cells by summing the increments over
+the prior partitions.  Integer sums recover EXACTLY, so the continued
+table is identical to the single-shot one — the multi-batch
+differential gate asserts set equality, not tolerance.  Replay,
+first-batch and ordering rules are the shared sink's
+(streaming/_sink.py); the ordering is checked on entry days.
 
-Ordering contract (the sprt_monitor guard): each micro-batch is
-USER-COMPLETE (a user's whole history arrives in one batch — the
-observation-window-closed delivery, since `converted` is undefined
-before the window closes) and batches arrive in strictly increasing
-entry-day order.  A late enrollment belongs to an already-emitted entry
-day and is a backfill correction, not a monitor update — rejected.
-The anchor day never moves after batch 0: with ordering, batch 0 holds
-the global earliest enrollment, so the look schedule matches the batch
-query's.
+Each micro-batch is USER-COMPLETE (a user's whole history arrives in
+one batch — the observation-window-closed delivery, since `converted`
+is undefined before the window closes).  The anchor day never moves
+after batch 0: with ordering, batch 0 holds the global earliest
+enrollment, so the look schedule matches the batch query's.
 
 Determinism mirrors q_group_sequential: counts are exact integers; z
 and the PRECOMPUTED boundary literals come from the shared
@@ -48,7 +43,11 @@ from bifrost_spark.queries.experiment_ops import (
     gs_decision_frame,
     gs_look_cells,
 )
-from bifrost_spark.streaming._sink import output_exists, write_batch_partition
+from bifrost_spark.streaming._sink import (
+    guard_order,
+    prior_partitions,
+    start_batch_sink,
+)
 
 _INC_COLS = ("inc_n_a", "inc_c_a", "inc_n_b", "inc_c_b")
 
@@ -56,15 +55,13 @@ _INC_COLS = ("inc_n_a", "inc_c_a", "inc_n_b", "inc_c_b")
 def _prior_state(
     spark, output_path: str, batch_id: int
 ) -> tuple[list[tuple[str, int, int, int]], object, object]:
-    """(cells, anchor_day, max_entry_day) over output partitions with
-    batch_id strictly below the current one: cells are the summed
-    per-(variant, look) integer increments (≤ 2K rows, driver-held).
-    Only the missing-path first-batch case resets to empty; any other
-    read error propagates so the micro-batch retries (the sprt_monitor
-    ADVICE-r8 contract)."""
-    if not output_exists(spark, output_path):
+    """(cells, anchor_day, max_entry_day) over the prior partitions
+    (``_sink.prior_partitions``): cells are the summed per-(variant,
+    look) integer increments (≤ 2K rows, driver-held); empty before the
+    first batch."""
+    prior = prior_partitions(spark, output_path, batch_id)
+    if prior is None:
         return [], None, None
-    prior = spark.read.parquet(output_path).filter(F.col("batch_id") < batch_id)
     rows = (
         prior.groupBy("look")
         .agg(
@@ -172,28 +169,15 @@ def start_gst_monitor(
     decision table from the output-carried cumulative cells, and emits
     it to the batch_id-partitioned replay-idempotent sink."""
 
-    def _emit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def _update(batch: DataFrame, batch_id: int) -> DataFrame | None:
         spark = batch.sparkSession
         cells, anchor, entry_max = _prior_state(spark, output_path, batch_id)
         update, dmin, _ = batch_gst_update(batch, cells, anchor)
         if update is None:
-            return
-        if entry_max is not None and dmin is not None and dmin <= entry_max:
-            raise ValueError(
-                f"gst_monitor: batch {batch_id} contains entry day "
-                f"{dmin} <= last emitted entry day {entry_max}; late "
-                "enrollments are backfill corrections, not monitor "
-                "updates (ordering contract)"
-            )
-        write_batch_partition(update, batch_id, output_path)
+            return None
+        return guard_order("gst_monitor", batch_id, update, entry_max, dmin)
 
-    return (
-        stream.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
+    return start_batch_sink(stream, output_path, checkpoint_path, _update)
 
 
 __all__ = [

@@ -61,6 +61,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from bifrost_spark.streaming._sink import hadoop_fs
+
 _VERSION = "v1"
 _COMPACT_SUFFIX = ".compact"
 _STAGING_SUFFIX = ".compact-staging"
@@ -74,12 +76,6 @@ class ManifestCompactStats:
     bins_written: int = 0
     bytes_rewritten: int = 0
     garbage_removed: int = 0
-
-
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jvm
 
 
 def _read_lines(fs, jvm, jpath) -> list[str]:
@@ -201,7 +197,7 @@ def compact_manifest_sink(
     Run with the writing query stopped.  Readers are consistent at every
     instant: the staged-log rename is the only commit point.
     """
-    fs, jvm = _fs_for(spark, path)
+    fs, jvm = hadoop_fs(spark, path), spark._jvm
     meta_dir = jvm.org.apache.hadoop.fs.Path(path + "/_spark_metadata")
     recover_manifest_compaction(fs, jvm, meta_dir)
     live, latest_name, valid_names = _replay_log(fs, jvm, meta_dir)

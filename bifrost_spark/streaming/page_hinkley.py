@@ -11,19 +11,14 @@ EXACTLY: each emitted day row keeps its day count ``t`` (integer), the
 cumulative DECIMAL(28,12) metric sum ``sum_m`` and addend sum
 ``sum_add`` (parquet round-trips decimals losslessly), and the running
 minimum ``ph_min`` (a previously-computed double).  Batch N recovers
-the max-day row over partitions with ``batch_id < N`` and hands those
-values back to the SAME ``ph_walk`` helper — so the continued walk is
-BIT-IDENTICAL to a single-shot walk over all days, which the
-multi-batch differential gate asserts with set equality, not tolerance.
-Contrast: the SPRT twin carries integer increments and the CUSUM twin
-raw clamped doubles; PH closes the family with exact decimal carries.
-
-The ``batch_id < N`` restriction is replay exactly-once (a re-run of
-batch N never reads its own half-written output; the dynamic-overwrite
-sink rewrites batch_id=N in place).  Ordering contract and backfill
-rejection mirror the SPRT/CUSUM guards: batches carry whole days in
-nondecreasing day order; a batch whose earliest day does not strictly
-follow the last emitted day is rejected.
+the max-day row of the prior partitions and hands those values back to
+the SAME ``ph_walk`` helper — so the continued walk is BIT-IDENTICAL to
+a single-shot walk over all days, which the multi-batch differential
+gate asserts with set equality, not tolerance.  Contrast: the SPRT twin
+carries integer increments and the CUSUM twin raw clamped doubles; PH
+closes the family with exact decimal carries.  Replay, first-batch and
+ordering rules (whole days per batch) are the shared sink's
+(streaming/_sink.py).
 
 No baseline artifact at all: Page-Hinkley's reference level is the
 running mean itself, which is exactly why it is the drift monitor you
@@ -38,6 +33,11 @@ from pyspark.sql.streaming import StreamingQuery
 
 from bifrost_spark.queries.experiment_ops import ph_decisions, ph_walk
 from bifrost_spark.queries.monitor_ops import cusum_daily_frame
+from bifrost_spark.streaming._sink import (
+    guard_order,
+    prior_partitions,
+    start_batch_sink,
+)
 
 
 def batch_ph_update(
@@ -62,16 +62,11 @@ def batch_ph_update(
 
 
 def _prior_state(spark, output_path: str, batch_id: int):
-    """(t, sum_m, sum_add, ph_min, max_day) from the max-day row over
-    output partitions with batch_id strictly below the current one.
-    Only the missing-path first-batch case resets the walk; other read
-    errors propagate (the sprt_monitor ADVICE-r8 contract)."""
-    from bifrost_spark.streaming._sink import output_exists
-
-    if not output_exists(spark, output_path):
-        return 0, None, None, None, None
-    prior = spark.read.parquet(output_path).filter(F.col("batch_id") < batch_id)
-    row = prior.orderBy(F.desc("day")).limit(1).collect()
+    """(t, sum_m, sum_add, ph_min, max_day) from the max-day row of the
+    prior partitions (``_sink.prior_partitions``); the zero state before
+    the first batch."""
+    prior = prior_partitions(spark, output_path, batch_id)
+    row = [] if prior is None else prior.orderBy(F.desc("day")).limit(1).collect()
     if not row:
         return 0, None, None, None, None
     r = row[0]
@@ -88,28 +83,10 @@ def start_ph_monitor(
     output-carried exact state, and emits per-day decision+state rows to
     the batch_id-partitioned replay-idempotent sink."""
 
-    def _emit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from bifrost_spark.streaming._sink import write_batch_partition
-
+    def _update(batch: DataFrame, batch_id: int) -> DataFrame:
         spark = batch.sparkSession
         t0, sm0, sa0, mn0, max_day = _prior_state(spark, output_path, batch_id)
         update = batch_ph_update(batch, t0, sm0, sa0, mn0)
-        if max_day is not None:
-            update = update.localCheckpoint(eager=True)
-            min_day = update.agg(F.min("day").alias("d")).collect()[0]["d"]
-            if min_day is not None and min_day <= max_day:
-                raise ValueError(
-                    f"page_hinkley: batch {batch_id} contains day "
-                    f"{min_day} <= last emitted day {max_day}; late days "
-                    "are backfill corrections, not monitor updates "
-                    "(ordering contract)"
-                )
-        write_batch_partition(update, batch_id, output_path)
+        return guard_order("page_hinkley", batch_id, update, max_day)
 
-    return (
-        stream.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
+    return start_batch_sink(stream, output_path, checkpoint_path, _update)

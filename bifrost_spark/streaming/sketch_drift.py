@@ -36,6 +36,7 @@ from bifrost_spark.queries.scale_ops import (
     daily_value_sketch,
     score_days_against_baseline,
 )
+from bifrost_spark.streaming._sink import start_batch_sink
 
 
 def fit_baseline_sketch(df: DataFrame) -> DataFrame:
@@ -74,20 +75,9 @@ def start_sketch_drift(
     checkpoint_path: str,
 ) -> StreamingQuery:
     """Start the monitor: every micro-batch emits its per-day KS rows to
-    a batch_id-partitioned parquet sink (dynamic overwrite →
-    replay-idempotent, the shared _sink protocol)."""
+    the batch_id-partitioned replay-idempotent sink."""
 
-    def _emit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from bifrost_spark.streaming._sink import write_batch_partition
-
-        write_batch_partition(
-            batch_sketch_drift(batch, baseline), batch_id, output_path
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return start_batch_sink(
+        stream, output_path, checkpoint_path,
+        lambda batch, _: batch_sketch_drift(batch, baseline),
     )

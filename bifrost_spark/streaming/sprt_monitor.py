@@ -8,20 +8,15 @@ State device (NEW in this family): unlike the drift monitors, the SPRT
 is inherently CUMULATIVE — batch N's llr needs every prior batch's
 counts.  Instead of a state store, the running totals live in the
 monitor's OWN OUTPUT: each emit writes per-day rows carrying both the
-day increments (n_day, c_day) and the cumulative columns, partitioned by
-batch_id; the next batch recovers its offsets by summing the increments
-over partitions with ``batch_id < N`` only.  That restriction is what
-makes replay exactly-once: a re-run of batch N reads the same prior
-partitions (its own half-written output is excluded by the predicate)
-and the dynamic-overwrite sink rewrites batch_id=N in place.
+day increments (n_day, c_day) and the cumulative columns; the next batch
+recovers its offsets by summing the increments over the prior
+partitions.  Replay, first-batch and ordering rules are the shared
+sink's (streaming/_sink.py).
 
-Ordering contract: each micro-batch is USER-COMPLETE (a user's whole
-event history arrives in one batch — the "observation window closed"
-delivery every outcome-attribution pipeline uses, since a user's
-converted flag is undefined until their window closes) and batches
-arrive in nondecreasing entry-day order.  A late enrollment would
-belong to an already-emitted day and is a backfill correction, not a
-monitor update.
+Each micro-batch is USER-COMPLETE (a user's whole event history arrives
+in one batch — the "observation window closed" delivery every
+outcome-attribution pipeline uses, since a user's converted flag is
+undefined until their window closes).
 
 Determinism mirrors q_sprt_monitor: counts are exact integers, the llr
 multiplies them by PRECOMPUTED log literals (shared constants, one
@@ -36,7 +31,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bifrost_spark.queries.monitor_ops import arm_b_daily_enrollments, sprt_walk
-from bifrost_spark.streaming._sink import output_exists
+from bifrost_spark.streaming._sink import (
+    guard_order,
+    prior_partitions,
+    start_batch_sink,
+)
 
 
 def batch_sprt_update(
@@ -50,28 +49,16 @@ def batch_sprt_update(
 def _prior_state(
     spark, output_path: str, batch_id: int
 ) -> tuple[int, int, object]:
-    """(n, c, max_day) over output partitions with batch_id strictly
-    below the current one — re-running batch N therefore never reads its
-    own partial output."""
-    if not output_exists(spark, output_path):  # first batch: no output yet
+    """(n, c, max_day) over the prior partitions (``_sink.prior_partitions``)."""
+    prior = prior_partitions(spark, output_path, batch_id)
+    if prior is None:
         return 0, 0, None
-    row = (
-        spark.read.parquet(output_path)
-        .filter(F.col("batch_id") < batch_id)
-        .agg(
-            F.coalesce(F.sum("n_day"), F.lit(0)).alias("n"),
-            F.coalesce(F.sum("c_day"), F.lit(0)).alias("c"),
-            F.max("day").alias("max_day"),
-        )
-        .collect()[0]
-    )
+    row = prior.agg(
+        F.coalesce(F.sum("n_day"), F.lit(0)).alias("n"),
+        F.coalesce(F.sum("c_day"), F.lit(0)).alias("c"),
+        F.max("day").alias("max_day"),
+    ).collect()[0]
     return int(row["n"]), int(row["c"]), row["max_day"]
-
-
-def prior_totals(spark, output_path: str, batch_id: int) -> tuple[int, int]:
-    """(n, c) already walked — see ``_prior_state``."""
-    n, c, _ = _prior_state(spark, output_path, batch_id)
-    return n, c
 
 
 def start_sprt_monitor(
@@ -84,38 +71,9 @@ def start_sprt_monitor(
     output-carried totals, and emits per-day decision rows to the
     batch_id-partitioned replay-idempotent sink."""
 
-    def _emit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from bifrost_spark.streaming._sink import write_batch_partition
-
-        n0, c0, max_day = _prior_state(
-            batch.sparkSession, output_path, batch_id
-        )
+    def _update(batch: DataFrame, batch_id: int) -> DataFrame:
+        n0, c0, max_day = _prior_state(batch.sparkSession, output_path, batch_id)
         update = batch_sprt_update(batch, n0, c0)
-        if max_day is not None:
-            # Multiply-consumed below (guard agg + sink write): pin it so
-            # the enrollment derivation runs once per micro-batch.
-            update = update.localCheckpoint(eager=True)
-            # Enforce the documented ordering contract (ADVICE r8): a
-            # batch whose earliest entry day does not strictly follow the
-            # last emitted day is a backfill for an already-walked day —
-            # appending it would produce non-monotone duplicate-day
-            # cumulative rows, so reject it instead of corrupting the
-            # walk.  Replay of batch N is unaffected: max_day comes from
-            # batch_id < N partitions only.
-            min_day = update.agg(F.min("day").alias("d")).collect()[0]["d"]
-            if min_day is not None and min_day <= max_day:
-                raise ValueError(
-                    f"sprt_monitor: batch {batch_id} contains entry day "
-                    f"{min_day} <= last emitted day {max_day}; late "
-                    "enrollments are backfill corrections, not monitor "
-                    "updates (ordering contract)"
-                )
-        write_batch_partition(update, batch_id, output_path)
+        return guard_order("sprt_monitor", batch_id, update, max_day)
 
-    return (
-        stream.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
+    return start_batch_sink(stream, output_path, checkpoint_path, _update)

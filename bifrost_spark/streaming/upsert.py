@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from bifrost_spark.streaming._sink import hadoop_fs
+
 
 def _latest_per_key(df: DataFrame, key_cols: list[str], order_cols: list) -> DataFrame:
     w = Window.partitionBy(*key_cols).orderBy(*order_cols)
@@ -115,9 +117,9 @@ def compact_state(spark: SparkSession, path: str, key_cols: list[str],
     also in the base with equal order keys and content).  All paths go
     through the Hadoop FileSystem API so the same code works on object
     stores (s3a/abfss), matching the rest of the streaming layer."""
-    jvm = spark.sparkContext._jvm
+    jvm = spark._jvm
     delta_root = jvm.org.apache.hadoop.fs.Path(f"{path}/delta")
-    fs = delta_root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs = hadoop_fs(spark, f"{path}/delta")
 
     superseded, min_id = [], 0
     for st in fs.listStatus(delta_root) or []:

@@ -135,3 +135,96 @@ def test_recovery_drops_stale_tmp(spark, tmp_path):
     compact_archive(spark, root, target_bytes=10**9)
     assert not any("compact" in n for n in os.listdir(leaf_dir))
     assert _rows(spark, root) == before
+
+
+def _stage_messages(spark, in_path, first, n_rows):
+    """One input file per rotation: offsets [first, first + n_rows) of
+    both partitions of topic ``evt``."""
+    (
+        spark.range(first, first + n_rows)
+        .crossJoin(spark.range(2).select(F.col("id").cast("int").alias("partition")))
+        .select(
+            F.lit("evt").alias("topic"),
+            "partition",
+            F.col("id").alias("offset"),
+            F.encode(F.concat(F.lit("m"), F.col("id")), "UTF-8").alias("value"),
+            F.timestamp_millis(F.col("id") * 1000).alias("ts"),
+        )
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(in_path)
+    )
+
+
+def test_compacts_offset_named_archive_output(spark, tmp_path):
+    """The offset-named writer's leaves are single FILES named
+    ``<first>.parquet``; compaction must bin them (not only directory
+    leaves), and a later run must bin the compactor's own directory leaf
+    together with newly drained file leaves."""
+    from bifrost_spark.streaming.archive import (
+        ArchiveConfig,
+        start_offset_named_archive,
+    )
+
+    in_path, root = str(tmp_path / "in"), str(tmp_path / "out")
+    cfg = ArchiveConfig(
+        output_path=root,
+        checkpoint_path=str(tmp_path / "ckpt"),
+        input_path=in_path,
+        max_files_per_trigger=1,
+        rotation_interval_secs=0,
+        group_id="grp",
+    )
+
+    def drain(rotations):
+        for b in rotations:
+            _stage_messages(spark, in_path, b * LEAF_ROWS, LEAF_ROWS)
+        q = start_offset_named_archive(spark, cfg)
+        q.processAllAvailable()
+        q.stop()
+
+    def leaves(p):
+        leaf_dir = f"{root}/grp/evt/partition={p}"
+        return sorted(n for n in os.listdir(leaf_dir) if n.endswith(".parquet"))
+
+    def rows():
+        return {
+            (p, r.offset, bytes(r.value))
+            for p in (0, 1)
+            for r in spark.read.parquet(f"{root}/grp/evt/partition={p}/*.parquet")
+            .collect()
+        }
+
+    def check(n_rows):
+        for p in (0, 1):
+            expected_next = 0
+            for name in leaves(p):  # name == first offset, runs chain
+                got = [
+                    r.offset
+                    for r in spark.read.parquet(f"{root}/grp/evt/partition={p}/{name}")
+                    .collect()
+                ]
+                assert got == list(range(expected_next, expected_next + len(got)))
+                assert name == f"{expected_next:010d}.parquet"
+                expected_next += len(got)
+            assert expected_next == n_rows
+
+    drain(range(3))
+    assert all(
+        os.path.isfile(f"{root}/grp/evt/partition=0/{n}") for n in leaves(0)
+    )
+    assert len(leaves(0)) == len(leaves(1)) == 3
+    before = rows()
+    stats = compact_archive(spark, root, target_bytes=10**9)
+    assert (stats.partitions_seen, stats.leaves_before, stats.leaves_after) == (2, 6, 2)
+    assert leaves(0) == leaves(1) == ["0000000000.parquet"]
+    assert rows() == before
+    check(3 * LEAF_ROWS)
+
+    drain(range(3, 5))  # the directory leaf now sits beside file leaves
+    before = rows()
+    stats = compact_archive(spark, root, target_bytes=10**9)
+    assert (stats.leaves_before, stats.leaves_after) == (6, 2)
+    assert leaves(0) == leaves(1) == ["0000000000.parquet"]
+    assert rows() == before
+    check(5 * LEAF_ROWS)

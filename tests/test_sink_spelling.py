@@ -1,0 +1,70 @@
+"""One spelling per device, checked on the parsed source (no Spark): the
+replay-idempotent batch_id sink protocol and the Hadoop FileSystem
+lookup live only in ``bifrost_spark/streaming/_sink.py``.  Outside it,
+no module may
+
+* call ``getFileSystem`` (use ``_sink.hadoop_fs``);
+* call ``write_batch_partition`` or ``output_exists`` (use
+  ``_sink.start_batch_sink`` / ``_sink.prior_partitions``);
+* hand ``foreachBatch`` a callback that writes a batch_id-partitioned
+  sink itself (directly or through a function of the same module).
+"""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "bifrost_spark"
+SINK = PKG / "streaming" / "_sink.py"
+SINK_CALLS = {"write_batch_partition", "output_exists"}
+
+
+def _name(call: ast.Call) -> str | None:
+    f = call.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _calls(node: ast.AST) -> list[ast.Call]:
+    return [n for n in ast.walk(node) if isinstance(n, ast.Call)]
+
+
+def _writes_batch_sink(node: ast.AST, defs: dict, seen: set) -> bool:
+    for call in _calls(node):
+        name = _name(call)
+        if name in SINK_CALLS:
+            return True
+        if name == "partitionBy" and any(
+            isinstance(a, ast.Constant) and a.value == "batch_id" for a in call.args
+        ):
+            return True
+        if name in defs and name not in seen:
+            seen.add(name)
+            if any(_writes_batch_sink(d, defs, seen) for d in defs[name]):
+                return True
+    return False
+
+
+def test_sink_and_hadoop_fs_have_one_spelling():
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == SINK:
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        defs: dict[str, list[ast.AST]] = {}
+        for n in ast.walk(tree):
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.setdefault(n.name, []).append(n)
+        where = path.relative_to(PKG)
+        for call in _calls(tree):
+            name = _name(call)
+            if name == "getFileSystem" or name in SINK_CALLS:
+                offenders.append(f"{where}:{call.lineno} calls {name}")
+            elif name == "foreachBatch" and call.args:
+                cb = call.args[0]
+                targets = defs.get(cb.id, []) if isinstance(cb, ast.Name) else [cb]
+                if any(_writes_batch_sink(t, defs, set()) for t in targets):
+                    offenders.append(
+                        f"{where}:{call.lineno} foreachBatch writes a batch_id sink"
+                    )
+    assert offenders == []

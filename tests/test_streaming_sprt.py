@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 
 from bifrost_spark import registry
 from bifrost_spark.streaming.sprt_monitor import (
+    _prior_state,
     batch_sprt_update,
-    prior_totals,
     start_sprt_monitor,
 )
 from bifrost_spark.tables import load_table
@@ -147,12 +147,12 @@ def test_missing_output_is_first_batch_but_corrupt_output_raises(
     """ADVICE r8: ONLY the missing-path case may reset the walk to (0,0).
     An existing-but-unreadable output must propagate, never silently
     restart the SPRT from zero."""
-    assert prior_totals(spark, str(tmp_path / "never_written"), 5) == (0, 0)
+    assert _prior_state(spark, str(tmp_path / "never_written"), 5) == (0, 0, None)
     bad = tmp_path / "bad_out"
     bad.mkdir()
     (bad / "part-00000.parquet").write_bytes(b"this is not parquet")
     with pytest.raises(Exception):
-        prior_totals(spark, str(bad), 5)
+        _prior_state(spark, str(bad), 5)
 
 
 def test_backfill_batch_is_rejected(spark, tmp_path):
@@ -187,7 +187,7 @@ def test_backfill_batch_is_rejected(spark, tmp_path):
 
 def test_replay_reads_only_prior_partitions(spark, sf_dir, tmp_path):
     """Re-emitting batch 1 after its own (possibly partial) output exists
-    must compute the SAME offsets — prior_totals filters batch_id < N, so
+    must compute the SAME offsets — _prior_state filters batch_id < N, so
     the monitor's own partition never feeds its state."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     out = str(tmp_path / "rout")
@@ -195,7 +195,7 @@ def test_replay_reads_only_prior_partitions(spark, sf_dir, tmp_path):
 
     half = ev.filter(F.col("user_id") % 2 == 0)
     write_batch_partition(batch_sprt_update(half, 0, 0), 0, out)
-    n0, c0 = prior_totals(spark, out, 1)
+    n0, c0, _ = _prior_state(spark, out, 1)
     write_batch_partition(
         batch_sprt_update(ev.join(half.select("user_id").distinct(),
                                   "user_id", "left_anti"), n0, c0),
@@ -204,7 +204,7 @@ def test_replay_reads_only_prior_partitions(spark, sf_dir, tmp_path):
     )
     once = _rows(spark.read.parquet(out))
     # replay batch 1: offsets must ignore batch 1's own partition
-    n0b, c0b = prior_totals(spark, out, 1)
+    n0b, c0b, _ = _prior_state(spark, out, 1)
     assert (n0b, c0b) == (n0, c0)
     write_batch_partition(
         batch_sprt_update(ev.join(half.select("user_id").distinct(),
@@ -214,7 +214,7 @@ def test_replay_reads_only_prior_partitions(spark, sf_dir, tmp_path):
     )
     assert _rows(spark.read.parquet(out)) == once
     # and the totals the NEXT batch would see cover both batches exactly
-    n2, c2 = prior_totals(spark, out, 2)
+    n2, c2, _ = _prior_state(spark, out, 2)
     total = ev.groupBy("user_id").count().count()
     b_users = [
         r[0]
