@@ -39,6 +39,9 @@ from pyspark.sql import functions as F
 
 _LEN = struct.Struct(">q")  # baldr: 8-byte big-endian record length
 _PATH_RE = re.compile(r"/([^/]+)/partition=(\d+)/(\d{10})\.baldr\.gz$")
+_MANIFEST_SCHEMA = (
+    "topic string, partition int, first_offset long, n_records long, path string"
+)
 
 
 def frame_records(values: list[bytes]) -> bytes:
@@ -120,19 +123,11 @@ def write_baldr_archive(
     msgs = df.select("topic", "partition", "offset", "value").repartition(
         "topic", "partition"
     )
-    manifest = msgs.mapInPandas(
-        write_partition,
-        schema=(
-            "topic string, partition int, first_offset long, "
-            "n_records long, path string"
-        ),
-    ).cache()
-    # run the side-effecting write NOW, exactly once: the cached (small)
-    # manifest is what later actions re-read — without this count() the
-    # write would be deferred to the caller's first action and re-executed
-    # on any uncached recomputation
-    manifest.count()
-    return manifest
+    # run the side-effecting write NOW, exactly once, in one job: the
+    # manifest (one row per key) is collected and handed back as a local
+    # frame, so no later action on it can re-execute the write
+    rows = msgs.mapInPandas(write_partition, schema=_MANIFEST_SCHEMA).collect()
+    return df.sparkSession.createDataFrame(rows, _MANIFEST_SCHEMA)
 
 
 def read_baldr_archive(spark: SparkSession, root: str, group_id: str = "bifrost-group") -> DataFrame:

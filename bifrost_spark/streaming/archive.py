@@ -22,7 +22,9 @@ Hive-style object keying (A11), so downstream engines partition-prune.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,8 +38,13 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+from pyspark.sql.window import Window
 
 from bifrost_spark.streaming._sink import hadoop_fs
+
+# A staged file of the offset-named writer (Spark escapes partition values
+# in directory names, hence ``unquote``)
+_STAGED_LEAF = re.compile(r"/topic=([^/]*)/partition=(\d+)/first_offset=(\d+)/[^/]+$")
 
 # The Kafka-source column contract (subset we archive).  When reading from a
 # real Kafka cluster these come from format("kafka") verbatim.
@@ -183,70 +190,71 @@ def start_offset_named_archive(spark: SparkSession, cfg: ArchiveConfig) -> Strea
     idempotent on re-upload after crash, same as the reference (same first
     offset → same key → overwrite).
 
-    Batch-local plan: TWO Spark jobs per micro-batch regardless of key
-    count — a tiny per-key min-offset agg (one row per (topic,partition),
-    the same bound as the reference's Spawner children — async.clj:16-35)
-    and ONE hash-partitioned ``partitionBy`` write staging every key's file
-    in a single distributed job.  Leaf files are then renamed to their
-    ``%010d first-offset`` names driver-side via the Hadoop FileSystem API
-    (scheme-portable: file://, s3a://, abfss://), concurrently across keys.
-    Renames are metadata ops, so the driver cost is O(keys) round-trips,
-    not O(keys) serialized Spark jobs — the shape that survives thousands
-    of topic-partitions per 60 s trigger.
+    Batch-local plan: one scan and one distributed write per micro-batch
+    (two Spark jobs under adaptive execution), in ``sink_partitions or
+    defaultParallelism`` tasks hash-partitioned on (topic, partition) —
+    sized by cores, not keys; hashing keeps each key in one task, so each
+    staged leaf holds one file.  The key's first offset is a window
+    ``min(offset)`` inside that job (no extra exchange: the repartition
+    meets its distribution), staged as a third partition column.  The
+    driver lists every staged file with ONE ``globStatus`` and renames each
+    to its ``%010d first-offset`` name via the Hadoop FileSystem API
+    (file://, s3a://, abfss://), concurrently across keys: O(keys) metadata
+    round-trips, not O(keys) Spark jobs.
     """
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         from concurrent.futures import ThreadPoolExecutor
 
         spark_b = batch.sparkSession
-        keys = [
-            (r["topic"], r["partition"], r["first_offset"])
-            for r in batch.groupBy("topic", "partition")
-            .agg(F.min("offset").alias("first_offset"))
-            .collect()
-        ]
-        if not keys:
-            return
-        # one task per key (capped by the A17 concurrency analog) → exactly
-        # one staged file per (topic, partition) leaf directory
-        n_tasks = len(keys)
-        if cfg.sink_partitions:
-            n_tasks = min(n_tasks, cfg.sink_partitions)
+        n_tasks = cfg.sink_partitions or spark_b.sparkContext.defaultParallelism
         staging = f"{cfg.output_path}/.staging-epoch-{epoch_id}"
         (
             batch.repartition(n_tasks, "topic", "partition")
+            .withColumn(
+                "first_offset",
+                F.min("offset").over(Window.partitionBy("topic", "partition")),
+            )
             .write.mode("overwrite")
-            .partitionBy("topic", "partition")
+            .partitionBy("topic", "partition", "first_offset")
             .parquet(staging)
         )
 
         HPath = spark_b._jvm.org.apache.hadoop.fs.Path
         fs = hadoop_fs(spark_b, staging)
+        leaves: dict[tuple, list] = {}
+        staged_files = f"{staging}/topic=*/partition=*/first_offset=*/part-*"
+        for st in fs.globStatus(HPath(staged_files)) or []:
+            src = st.getPath()
+            topic, partition, first_offset = _STAGED_LEAF.search(src.toString()).groups()
+            leaves.setdefault((unquote(topic), int(partition)), []).append(
+                (int(first_offset), src)
+            )
 
-        def move_leaf(key: tuple) -> None:
-            topic, partition, first_offset = key
-            staged_dir = HPath(f"{staging}/topic={topic}/partition={partition}")
-            parts = fs.globStatus(HPath(staged_dir, "part-*"))
-            if not parts or len(parts) != 1:
+        def move_leaf(item: tuple) -> None:
+            (topic, partition), staged = item
+            if len(staged) != 1:
                 raise RuntimeError(
                     f"expected exactly 1 staged file for {topic}/{partition}, "
-                    f"got {0 if not parts else len(parts)}"
+                    f"got {len(staged)}"
                 )
-            dst_dir = HPath(
+            first_offset, src = staged[0]
+            dst = HPath(
                 f"{cfg.output_path}/{cfg.group_id}/{topic}/partition={partition}"
+                f"/{first_offset:010d}.parquet"
             )
-            fs.mkdirs(dst_dir)
-            dst = HPath(dst_dir, f"{first_offset:010d}.parquet")
+            fs.mkdirs(dst.getParent())
             # crash-replay idempotence: same first offset → same key →
             # overwrite (s3.clj:15-20 semantics)
             fs.delete(dst, False)
-            if not fs.rename(parts[0].getPath(), dst):
+            if not fs.rename(src, dst):
                 raise RuntimeError(f"rename failed for {dst}")
 
-        with ThreadPoolExecutor(max_workers=min(16, len(keys))) as pool:
+        # threads start on demand, at most one per leaf
+        with ThreadPoolExecutor(max_workers=16) as pool:
             # list() re-raises the first worker exception → batch fails →
             # offsets not committed → replay, preserving at-least-once
-            list(pool.map(move_leaf, keys))
+            list(pool.map(move_leaf, leaves.items()))
         fs.delete(HPath(staging), True)
 
     src = apply_topic_filter(build_source(spark, cfg), cfg)
@@ -270,9 +278,7 @@ def start_baldr_archive(spark: SparkSession, cfg: ArchiveConfig) -> StreamingQue
     from bifrost_spark.sources.baldr import write_baldr_archive
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        manifest = write_baldr_archive(batch, cfg.output_path, cfg.group_id)
-        manifest.collect()  # materialize the distributed write
-        manifest.unpersist()
+        write_baldr_archive(batch, cfg.output_path, cfg.group_id)
 
     src = apply_topic_filter(build_source(spark, cfg), cfg)
     return (

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import glob
 import os
+import threading
 import time
 
 import pytest
@@ -21,6 +22,7 @@ from pyspark.sql.window import Window
 from bifrost_spark.streaming.archive import (
     ArchiveConfig,
     start_archive,
+    start_baldr_archive,
     start_offset_named_archive,
 )
 from bifrost_spark.streaming.listener import MetricsListener
@@ -178,7 +180,10 @@ def test_topic_filter(spark, staged_messages, tmp_path):
     assert "click" not in topics and topics, f"blacklist leaked: {topics}"
 
 
-def test_offset_named_leaves(spark, staged_messages, tmp_path):
+# sink_partitions=2: far fewer write tasks than keys, so one task writes
+# many leaves; hash partitioning must still give one file per leaf
+@pytest.mark.parametrize("sink_partitions", [None, 2])
+def test_offset_named_leaves(spark, staged_messages, tmp_path, sink_partitions):
     in_path, n_msgs = staged_messages
     cfg = ArchiveConfig(
         output_path=str(tmp_path / "out"),
@@ -188,6 +193,7 @@ def test_offset_named_leaves(spark, staged_messages, tmp_path):
         max_files_per_trigger=2,  # ≥2 rotations → ≥2 leaves per hot partition
         rotation_interval_secs=1,
         group_id="g1",
+        sink_partitions=sink_partitions,
     )
     _drain(start_offset_named_archive(spark, cfg))
 
@@ -217,6 +223,111 @@ def test_offset_named_leaves(spark, staged_messages, tmp_path):
             cnt = spark.read.parquet(leaf).count()
             assert int(os.path.basename(leaf).replace(".parquet", "")) == expected_next
             expected_next += cnt
+
+
+@pytest.mark.parametrize(
+    "start", [start_archive, start_offset_named_archive, start_baldr_archive]
+)
+def test_progress_counts_each_row_once(spark, staged_messages, tmp_path, start):
+    """Streaming progress ``numInputRows`` (what MetricsListener forwards
+    as message rates) sums to the input size for every writer: a writer
+    that scans its batch twice would report each row twice."""
+    in_path, n_msgs = staged_messages
+    cfg = ArchiveConfig(
+        output_path=str(tmp_path / "out"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        source="file",
+        input_path=in_path,
+        max_files_per_trigger=2,
+        rotation_interval_secs=1,
+    )
+    q = start(spark, cfg)
+    _drain(q)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == n_msgs
+
+
+class _FaultyFS:
+    """Delegating proxy over a Hadoop FileSystem that fails the offset
+    writer's rename step: every ``rename`` after the first ``renames_ok``
+    raises, or (``renames_ok=None``) the staging directory's delete
+    raises after all renames went through."""
+
+    def __init__(self, fs, renames_ok):
+        self._fs, self._ok, self._renamed = fs, renames_ok, 0
+        self._lock = threading.Lock()
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def rename(self, src, dst):
+        with self._lock:
+            if self._ok is not None and self._renamed >= self._ok:
+                raise OSError(f"injected: rename after {self._renamed} renames")
+            self._renamed += 1
+        return self._fs.rename(src, dst)
+
+    def delete(self, path, recursive):
+        if self._ok is None and recursive and ".staging-epoch-" in path.toString():
+            raise OSError("injected: staging delete")
+        return self._fs.delete(path, recursive)
+
+
+@pytest.mark.parametrize(
+    "renames_ok", [0, 5, None], ids=["first-rename", "after-5-renames", "staging-delete"]
+)
+def test_offset_named_crash_in_rename_step_replays_exactly_once(
+    spark, tmp_path, monkeypatch, renames_ok
+):
+    """Kill the offset-named writer inside its second batch's rename step
+    (before the checkpoint commit), restart from the same checkpoint with
+    the real FileSystem and drain: every (topic, partition, offset) is
+    archived exactly once, leaf names are first offsets and chain with no
+    gap, and no staging directory survives (``perfbench/drain.py``'s
+    ``check_drain`` predicates)."""
+    from perfbench import backlog as pb_backlog
+    from perfbench.drain import GROUP, Drain, check_drain
+
+    from bifrost_spark.streaming import archive
+
+    work = str(tmp_path)
+    backlog = pb_backlog.generate(str(tmp_path / "in"), seed=5, n_files=2)
+    cfg = ArchiveConfig(
+        output_path=str(tmp_path / "out-offset"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        source="file",
+        input_path=backlog.path,
+        max_files_per_trigger=1,
+        rotation_interval_secs=0,
+        group_id=GROUP,
+    )
+    real_fs, calls = archive.hadoop_fs, []
+
+    def faulty_fs(spark_b, path):
+        # one lookup per batch: the second batch gets the faulty FS
+        calls.append(real_fs(spark_b, path))
+        if len(calls) == 2:
+            calls[-1] = _FaultyFS(calls[-1], renames_ok)
+        return calls[-1]
+
+    monkeypatch.setattr(archive, "hadoop_fs", faulty_fs)
+    q = start_offset_named_archive(spark, cfg)
+    with pytest.raises(Exception, match="injected"):
+        q.processAllAvailable()
+    q.stop()
+    committed = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(committed) == 1 and len(calls) == 2
+    if renames_ok is None:  # every leaf was renamed, the staging dir kept
+        assert glob.glob(str(tmp_path / "out-offset" / ".staging-epoch-1"))
+    else:
+        assert calls[1]._renamed == renames_ok
+
+    monkeypatch.setattr(archive, "hadoop_fs", real_fs)
+    q = start_offset_named_archive(spark, cfg)
+    _drain(q)
+    d = Drain("offset", 0.0, 0.0, committed)
+    d.batches += [p for p in q.recentProgress if p["numInputRows"] > 0]
+    check_drain(d, backlog, work)
+    assert d.problems == []
 
 
 def test_metrics_listener(spark, staged_messages, tmp_path):
