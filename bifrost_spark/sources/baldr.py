@@ -11,14 +11,17 @@ the engine the same wire format, so a consumer of the reference's
 baldr output" completion of A7 (SURVEY.md §2, §7.4).
 
 Distribution shape:
-  * WRITER — one task per input partition: the message stream is
-    repartitioned on (topic, partition) and sorted by offset inside each
-    task; the task splits its rows into per-key runs and streams each run
-    through gzip into `<root>/<group>/<topic>/partition=<p>/
+  * WRITER — the message stream is hash-partitioned on (topic,
+    partition) into defaultParallelism tasks (an explicit count, so
+    adaptive execution cannot fold a small batch onto one task); each task
+    splits its rows into per-key runs sorted by offset, checks and frames
+    every run, then streams each through gzip into a hidden temp name that
+    is renamed to `<root>/<group>/<topic>/partition=<p>/
     <first-offset %010d>.baldr.gz` (the reference's object key, s3.clj:
-    15-20).  Payload bytes never pass through the driver; each file is
-    written by exactly one task.  Paths are plain `open()` — file:// and
-    mounted stores here; an fsspec handle slots in for object stores.
+    15-20), so an object appears whole or not at all.  Payload bytes never
+    pass through the driver; each file is written by exactly one task.
+    Paths are plain `open()` — file:// and mounted stores here; an fsspec
+    handle slots in for object stores.
   * READER — Spark's `binaryFile` source lists and reads whole files in
     parallel (one row per file), and an Arrow-batched `mapInPandas`
     gunzips + unframes each file, reconstructing (topic, partition,
@@ -33,6 +36,7 @@ import io
 import os
 import re
 import struct
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,9 +79,11 @@ def write_baldr_archive(
     as offset-named ``.baldr.gz`` objects; returns the written manifest
     (topic, partition, first_offset, n_records, path) as a DataFrame.
 
-    One shuffle (repartition on the key) + in-task sort; every file is
-    produced by a single task streaming gzip — the same per-(topic,
-    partition) single-writer discipline as the reference's consumer FSM.
+    One shuffle (repartition on the key into defaultParallelism tasks) +
+    in-task sort; every file is produced by a single task streaming gzip
+    — the same per-(topic, partition) single-writer discipline as the
+    reference's consumer FSM.  A null payload or an offset gap raises
+    ``ValueError`` before the task opens any file.
     """
     import pandas as pd
 
@@ -86,6 +92,9 @@ def write_baldr_archive(
         if not chunks:
             return
         rows = pd.concat(chunks, ignore_index=True)
+        # check and frame every run before any file is opened, so a bad
+        # run leaves no object behind
+        runs = []
         for (topic, part), grp in rows.groupby(["topic", "partition"], sort=True):
             grp = grp.sort_values("offset")
             first = int(grp["offset"].iloc[0])
@@ -102,31 +111,52 @@ def write_baldr_archive(
                     "framing cannot represent offset gaps; compact/renumber "
                     "upstream or archive as parquet (which stores offsets)"
                 )
-            d = os.path.join(root, group_id, str(topic), f"partition={int(part)}")
+            nulls = grp["offset"][grp["value"].isna()]
+            if len(nulls):
+                raise ValueError(
+                    f"null payload at {topic}/partition={part} offset "
+                    f"{int(nulls.iloc[0])} — baldr framing has no null record "
+                    "(e.g. a Kafka tombstone); filter tombstones upstream or "
+                    "archive as parquet (which stores nulls)"
+                )
+            runs.append((topic, int(part), first, len(grp), frame_records([bytes(v) for v in grp["value"]])))
+        for topic, part, first, n, framed in runs:
+            d = os.path.join(root, group_id, str(topic), f"partition={part}")
             os.makedirs(d, exist_ok=True)
             path = os.path.join(d, f"{first:010d}.baldr.gz")
-            # mtime=0 → byte-stable gzip output across runs (reproducible
-            # objects make re-upload idempotence checkable by digest)
-            with open(path, "wb") as fh:
-                with gzip.GzipFile(fileobj=fh, mode="wb", mtime=0) as gz:
-                    gz.write(frame_records([bytes(v) for v in grp["value"]]))
+            # write a hidden temp name, then rename: each object appears
+            # whole (the reference uploads a finished temp file,
+            # kafka.clj:71-72).  The gzip header names the object, not the
+            # temp file, and mtime=0 → byte-stable output across runs
+            # (reproducible objects make re-upload idempotence checkable
+            # by digest)
+            tmp = os.path.join(d, f".{first:010d}.{uuid.uuid4().hex}.tmp")
+            with open(tmp, "wb") as fh:
+                with gzip.GzipFile(path, "wb", fileobj=fh, mtime=0) as gz:
+                    gz.write(framed)
+            os.replace(tmp, path)
             yield pd.DataFrame(
                 {
                     "topic": [topic],
-                    "partition": [int(part)],
+                    "partition": [part],
                     "first_offset": [first],
-                    "n_records": [len(grp)],
+                    "n_records": [n],
                     "path": [path],
                 }
             )
 
-    msgs = df.select("topic", "partition", "offset", "value").repartition(
-        "topic", "partition"
-    )
+    msgs = df.select("topic", "partition", "offset", "value")
+    # an explicit task count: an unsized repartition of a small batch is
+    # coalesced by adaptive execution onto one task
+    n_tasks = df.sparkSession.sparkContext.defaultParallelism
     # run the side-effecting write NOW, exactly once, in one job: the
     # manifest (one row per key) is collected and handed back as a local
     # frame, so no later action on it can re-execute the write
-    rows = msgs.mapInPandas(write_partition, schema=_MANIFEST_SCHEMA).collect()
+    rows = (
+        msgs.repartition(n_tasks, "topic", "partition")
+        .mapInPandas(write_partition, schema=_MANIFEST_SCHEMA)
+        .collect()
+    )
     return df.sparkSession.createDataFrame(rows, _MANIFEST_SCHEMA)
 
 

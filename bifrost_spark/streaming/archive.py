@@ -42,9 +42,10 @@ from pyspark.sql.window import Window
 
 from bifrost_spark.streaming._sink import hadoop_fs
 
-# A staged file of the offset-named writer (Spark escapes partition values
-# in directory names, hence ``unquote``)
-_STAGED_LEAF = re.compile(r"/topic=([^/]*)/partition=(\d+)/first_offset=(\d+)/[^/]+$")
+# A staged file of the offset-named writer: its ``leaf=`` directory holds
+# the final relative path (Spark escapes partition values in directory
+# names, hence ``unquote``)
+_STAGED_LEAF = re.compile(r"/leaf=([^/]*)/[^/]+$")
 
 # The Kafka-source column contract (subset we archive).  When reading from a
 # real Kafka cluster these come from format("kafka") verbatim.
@@ -91,7 +92,9 @@ class ArchiveConfig:
     # (kafka.security.protocol, kafka.sasl.jaas.config, …), source options
     # are bare (failOnDataLoss, minPartitions, …)
     kafka_options: dict[str, str] = field(default_factory=dict)
-    # uploader concurrency analog (A17): sink task parallelism
+    # uploader concurrency analog (A17): write tasks of the parquet and
+    # offset-named writers; None means defaultParallelism (one per core),
+    # which the baldr writer always uses
     sink_partitions: int | None = None
     # sink wire format: "parquet" (columnar, default) | "baldr"
     # (byte-exact reference format via sources/baldr.py)
@@ -147,15 +150,27 @@ def apply_topic_filter(df: DataFrame, cfg: ArchiveConfig) -> DataFrame:
     return df
 
 
+def _by_key(df: DataFrame, cfg: ArchiveConfig) -> DataFrame:
+    """Hash-partition messages on (topic, partition) into ``sink_partitions
+    or defaultParallelism`` tasks: the write is sized by cores, not by
+    input splits or keys, and each key stays in one task, so each leaf is
+    written as one file (the reference's per-partition writers behind a
+    fixed uploader pool, s3.clj:117-124)."""
+    n_tasks = cfg.sink_partitions or df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n_tasks, "topic", "partition")
+
+
 def start_archive(spark: SparkSession, cfg: ArchiveConfig) -> StreamingQuery:
     """Partitioned exactly-once parquet archive.
 
     Layout: ``{output}/topic=<t>/partition=<p>/part-*.parquet`` — the
-    engine's rendering of A11's object keys.  The checkpoint directory is
-    the ZK-offset-store replacement (A14/A15): offsets WAL'd pre-batch,
-    committed post-sink, so kill/restart resumes without loss and the
-    manifest suppresses duplicate files (stronger than the reference's
-    at-least-once)."""
+    engine's rendering of A11's object keys.  Each micro-batch is written
+    by ``_by_key``'s core-sized tasks (one exchange; without it the file
+    source hands the whole batch to one task per input split).  The
+    checkpoint directory is the ZK-offset-store replacement (A14/A15):
+    offsets WAL'd pre-batch, committed post-sink, so kill/restart resumes
+    without loss and the manifest suppresses duplicate files (stronger
+    than the reference's at-least-once)."""
     src = apply_topic_filter(build_source(spark, cfg), cfg)
     # In-flight quality counters via Spark's observe() API — evaluated
     # DURING the sink write (no second pass over the batch), surfaced per
@@ -170,10 +185,8 @@ def start_archive(spark: SparkSession, cfg: ArchiveConfig) -> StreamingQuery:
         ),
         F.sum(F.coalesce(F.length("value"), F.lit(0))).alias("payload_bytes"),
     )
-    if cfg.sink_partitions:
-        src = src.repartition(cfg.sink_partitions, "topic", "partition")
     return (
-        src.writeStream.format("parquet")
+        _by_key(src, cfg).writeStream.format("parquet")
         .option("path", cfg.output_path)
         .option("checkpointLocation", cfg.checkpoint_path)
         .partitionBy("topic", "partition")
@@ -191,63 +204,59 @@ def start_offset_named_archive(spark: SparkSession, cfg: ArchiveConfig) -> Strea
     offset → same key → overwrite).
 
     Batch-local plan: one scan and one distributed write per micro-batch
-    (two Spark jobs under adaptive execution), in ``sink_partitions or
-    defaultParallelism`` tasks hash-partitioned on (topic, partition) —
-    sized by cores, not keys; hashing keeps each key in one task, so each
-    staged leaf holds one file.  The key's first offset is a window
-    ``min(offset)`` inside that job (no extra exchange: the repartition
-    meets its distribution), staged as a third partition column.  The
-    driver lists every staged file with ONE ``globStatus`` and renames each
-    to its ``%010d first-offset`` name via the Hadoop FileSystem API
-    (file://, s3a://, abfss://), concurrently across keys: O(keys) metadata
-    round-trips, not O(keys) Spark jobs.
+    (two Spark jobs under adaptive execution), in ``_by_key``'s core-sized
+    tasks; hashing keeps each key in one task, so each staged leaf holds
+    one file.  The key's first offset is a window ``min(offset)`` inside
+    that job (no extra exchange: the repartition meets its distribution).
+    The batch is staged under ONE partition column, ``leaf``, holding the
+    final relative path ``<topic>/partition=<p>/<%010d>.parquet``, so each
+    leaf costs one staging directory (every directory the local Hadoop
+    FileSystem creates forks a ``chmod``).  The driver lists every staged
+    file with ONE ``globStatus`` and renames each to its leaf via the
+    Hadoop FileSystem API (file://, s3a://, abfss://), concurrently across
+    keys: O(keys) metadata round-trips, not O(keys) Spark jobs.
     """
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         from concurrent.futures import ThreadPoolExecutor
 
         spark_b = batch.sparkSession
-        n_tasks = cfg.sink_partitions or spark_b.sparkContext.defaultParallelism
         staging = f"{cfg.output_path}/.staging-epoch-{epoch_id}"
+        first_offset = F.min("offset").over(Window.partitionBy("topic", "partition"))
         (
-            batch.repartition(n_tasks, "topic", "partition")
+            _by_key(batch, cfg)
             .withColumn(
-                "first_offset",
-                F.min("offset").over(Window.partitionBy("topic", "partition")),
+                "leaf",
+                F.format_string(
+                    "%s/partition=%d/%010d.parquet", "topic", "partition", first_offset
+                ),
             )
+            .drop("topic", "partition")
             .write.mode("overwrite")
-            .partitionBy("topic", "partition", "first_offset")
+            .partitionBy("leaf")
             .parquet(staging)
         )
 
         HPath = spark_b._jvm.org.apache.hadoop.fs.Path
         fs = hadoop_fs(spark_b, staging)
-        leaves: dict[tuple, list] = {}
-        staged_files = f"{staging}/topic=*/partition=*/first_offset=*/part-*"
-        for st in fs.globStatus(HPath(staged_files)) or []:
+        leaves: dict[str, list] = {}
+        for st in fs.globStatus(HPath(f"{staging}/leaf=*/part-*")) or []:
             src = st.getPath()
-            topic, partition, first_offset = _STAGED_LEAF.search(src.toString()).groups()
-            leaves.setdefault((unquote(topic), int(partition)), []).append(
-                (int(first_offset), src)
-            )
+            leaf = unquote(_STAGED_LEAF.search(src.toString()).group(1))
+            leaves.setdefault(leaf, []).append(src)
 
         def move_leaf(item: tuple) -> None:
-            (topic, partition), staged = item
+            leaf, staged = item
             if len(staged) != 1:
                 raise RuntimeError(
-                    f"expected exactly 1 staged file for {topic}/{partition}, "
-                    f"got {len(staged)}"
+                    f"expected exactly 1 staged file for {leaf}, got {len(staged)}"
                 )
-            first_offset, src = staged[0]
-            dst = HPath(
-                f"{cfg.output_path}/{cfg.group_id}/{topic}/partition={partition}"
-                f"/{first_offset:010d}.parquet"
-            )
+            dst = HPath(f"{cfg.output_path}/{cfg.group_id}/{leaf}")
             fs.mkdirs(dst.getParent())
             # crash-replay idempotence: same first offset → same key →
             # overwrite (s3.clj:15-20 semantics)
             fs.delete(dst, False)
-            if not fs.rename(src, dst):
+            if not fs.rename(staged[0], dst):
                 raise RuntimeError(f"rename failed for {dst}")
 
         # threads start on demand, at most one per leaf

@@ -164,6 +164,22 @@ def test_baldr_write_rejects_offset_gaps(spark, tmp_path):
         write_baldr_archive(gapped, str(tmp_path / "arch"))
 
 
+def test_baldr_write_rejects_null_payload_leaving_no_object(spark, tmp_path):
+    """A null payload (a Kafka tombstone) has no baldr frame: the writer
+    refuses the run before it opens any file, so no empty or partial
+    object is left at a real key."""
+    from pyspark.sql.utils import PythonException
+
+    msgs = spark.createDataFrame(
+        [("t", 0, 10, b"a"), ("t", 0, 11, None), ("t", 0, 12, b"c")],
+        "topic string, partition int, offset long, value binary",
+    )
+    root = str(tmp_path / "arch")
+    with pytest.raises(PythonException, match="null payload at t/partition=0 offset 11"):
+        write_baldr_archive(msgs, root)
+    assert glob.glob(f"{root}/**/*.baldr.gz", recursive=True) == []
+
+
 def test_baldr_write_materializes_immediately(spark, messages, tmp_path):
     """write_baldr_archive must run the side-effecting write before
     returning — files exist without the caller taking any action."""

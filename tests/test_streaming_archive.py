@@ -12,8 +12,10 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import threading
 import time
+from urllib.parse import unquote
 
 import pytest
 from pyspark.sql import functions as F
@@ -246,6 +248,41 @@ def test_progress_counts_each_row_once(spark, staged_messages, tmp_path, start):
     assert sum(p["numInputRows"] for p in q.recentProgress) == n_msgs
 
 
+@pytest.mark.parametrize(
+    "start", [start_archive, start_offset_named_archive, start_baldr_archive]
+)
+def test_write_is_sized_by_cores(spark, staged_messages, tmp_path, start):
+    """Every writer spreads a batch's leaves over the cores: each batch's
+    write stage runs in ``defaultParallelism`` tasks, not in one task per
+    input split.  Streaming runs a query's jobs, its ``foreachBatch``
+    callbacks' included, in the job group of its run id."""
+    in_path, _ = staged_messages
+    cfg = ArchiveConfig(
+        output_path=str(tmp_path / "out"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        source="file",
+        input_path=in_path,
+        max_files_per_trigger=2,
+        rotation_interval_secs=1,
+    )
+    q = start(spark, cfg)
+    _drain(q)
+    n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    tasks = {}  # stage id -> tasks; a reused map stage is listed by two jobs
+    for job_id in tracker.getJobIdsForGroup(str(q.runId)):
+        for stage_id in tracker.getJobInfo(job_id).stageIds:
+            st = tracker.getStageInfo(stage_id)
+            if st is not None and st.numCompletedTasks > 0:
+                tasks[stage_id] = st.numTasks
+    n = sc.defaultParallelism
+    assert n > 1 and n_batches == 2
+    assert max(tasks.values()) == n, tasks
+    assert list(tasks.values()).count(n) == n_batches, tasks
+
+
 class _FaultyFS:
     """Delegating proxy over a Hadoop FileSystem that fails the offset
     writer's rename step: every ``rename`` after the first ``renames_ok``
@@ -272,18 +309,37 @@ class _FaultyFS:
         return self._fs.delete(path, recursive)
 
 
+def _staging_layout(staging: str) -> tuple[list[str], list[str]]:
+    """Subdirectories and data files (no ``_SUCCESS``, no hidden ``.crc``)
+    of a staging directory, relative to it."""
+    dirs, files = [], []
+    for root, ds, fs in os.walk(staging):
+        rel = os.path.relpath(root, staging)
+        dirs += [os.path.normpath(os.path.join(rel, d)) for d in ds]
+        files += [
+            os.path.normpath(os.path.join(rel, f))
+            for f in fs
+            if not f.startswith((".", "_"))
+        ]
+    return dirs, files
+
+
 @pytest.mark.parametrize(
-    "renames_ok", [0, 5, None], ids=["first-rename", "after-5-renames", "staging-delete"]
+    "renames_ok",
+    [0, 5, None, "lookup"],
+    ids=["first-rename", "after-5-renames", "staging-delete", "after-staged-write"],
 )
 def test_offset_named_crash_in_rename_step_replays_exactly_once(
     spark, tmp_path, monkeypatch, renames_ok
 ):
-    """Kill the offset-named writer inside its second batch's rename step
-    (before the checkpoint commit), restart from the same checkpoint with
-    the real FileSystem and drain: every (topic, partition, offset) is
-    archived exactly once, leaf names are first offsets and chain with no
-    gap, and no staging directory survives (``perfbench/drain.py``'s
-    ``check_drain`` predicates)."""
+    """Kill the offset-named writer inside its second batch (before the
+    checkpoint commit) after the staged write, in its rename step or at
+    the staging delete; restart from the same checkpoint with the real
+    FileSystem and drain: every (topic, partition, offset) is archived
+    exactly once, leaf names are first offsets and chain with no gap, and
+    no staging directory survives (``perfbench/drain.py``'s
+    ``check_drain`` predicates).  The staging directory a crash leaves is
+    one ``leaf=`` level deep."""
     from perfbench import backlog as pb_backlog
     from perfbench.drain import GROUP, Drain, check_drain
 
@@ -303,9 +359,12 @@ def test_offset_named_crash_in_rename_step_replays_exactly_once(
     real_fs, calls = archive.hadoop_fs, []
 
     def faulty_fs(spark_b, path):
-        # one lookup per batch: the second batch gets the faulty FS
+        # one lookup per batch, right after the staged write: the second
+        # batch's lookup fails or hands out the faulty FS
         calls.append(real_fs(spark_b, path))
         if len(calls) == 2:
+            if renames_ok == "lookup":
+                raise OSError("injected: FileSystem lookup after the staged write")
             calls[-1] = _FaultyFS(calls[-1], renames_ok)
         return calls[-1]
 
@@ -316,8 +375,16 @@ def test_offset_named_crash_in_rename_step_replays_exactly_once(
     q.stop()
     committed = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert len(committed) == 1 and len(calls) == 2
-    if renames_ok is None:  # every leaf was renamed, the staging dir kept
-        assert glob.glob(str(tmp_path / "out-offset" / ".staging-epoch-1"))
+    dirs, files = _staging_layout(str(tmp_path / "out-offset" / ".staging-epoch-1"))
+    assert dirs and all(re.fullmatch(r"leaf=[^/]+", d) for d in dirs), dirs
+    # a leaf directory is named by the leaf's path under the group
+    for d in dirs:
+        assert re.fullmatch(r"t\d\d/partition=\d/\d{10}\.parquet", unquote(d[5:])), d
+    if renames_ok == "lookup":  # staged, nothing renamed: one file per leaf
+        assert sorted(os.path.dirname(f) for f in files) == sorted(dirs)
+        assert all(re.fullmatch(r"leaf=[^/]+/part-[^/]+", f) for f in files), files
+    elif renames_ok is None:  # every leaf was renamed, the staging dir kept
+        assert files == []
     else:
         assert calls[1]._renamed == renames_ok
 
@@ -325,6 +392,73 @@ def test_offset_named_crash_in_rename_step_replays_exactly_once(
     q = start_offset_named_archive(spark, cfg)
     _drain(q)
     d = Drain("offset", 0.0, 0.0, committed)
+    d.batches += [p for p in q.recentProgress if p["numInputRows"] > 0]
+    check_drain(d, backlog, work)
+    assert d.problems == []
+
+
+@pytest.mark.parametrize("some_keys", [True, False], ids=["some-keys", "all-keys"])
+def test_baldr_crash_after_write_replays_exactly_once(
+    spark, tmp_path, monkeypatch, some_keys
+):
+    """Kill the baldr writer in its second batch after it wrote some or
+    all of the batch's objects (before the checkpoint commit), restart
+    from the same checkpoint and drain: the replay rewrites the same
+    object names with the same bytes, and ``check_drain`` finds every
+    (topic, partition, offset) exactly once, leaves named by first offset
+    and chained, and the bytes equal to the input."""
+    import hashlib
+
+    from perfbench import backlog as pb_backlog
+    from perfbench.drain import GROUP, Drain, check_drain
+
+    from bifrost_spark.sources import baldr
+
+    work = str(tmp_path)
+    backlog = pb_backlog.generate(str(tmp_path / "in"), seed=5, n_files=2)
+    out = tmp_path / "out-baldr"
+    cfg = ArchiveConfig(
+        output_path=str(out),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        source="file",
+        input_path=backlog.path,
+        max_files_per_trigger=1,
+        rotation_interval_secs=0,
+        group_id=GROUP,
+    )
+    real_write, written = baldr.write_baldr_archive, []
+
+    def crashing_write(batch, root, group_id):
+        if written:  # the second batch
+            if some_keys:
+                batch = batch.filter(F.col("partition") < 2)
+            written.append(real_write(batch, root, group_id).count())
+            raise OSError("injected: crash after the baldr write")
+        written.append(real_write(batch, root, group_id).count())
+
+    def digests() -> dict[str, str]:
+        return {
+            str(f): hashlib.sha256(f.read_bytes()).hexdigest()
+            for f in out.glob(f"{GROUP}/*/partition=*/*.baldr.gz")
+        }
+
+    monkeypatch.setattr(baldr, "write_baldr_archive", crashing_write)
+    q = start_baldr_archive(spark, cfg)
+    with pytest.raises(Exception, match="injected"):
+        q.processAllAvailable()
+    q.stop()
+    committed = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(committed) == 1 and len(written) == 2
+    before = digests()
+    assert len(before) == sum(written) and 0 < written[1]
+
+    monkeypatch.setattr(baldr, "write_baldr_archive", real_write)
+    q = start_baldr_archive(spark, cfg)
+    _drain(q)
+    after = digests()
+    assert {f: after.get(f) for f in before} == before  # same bytes on replay
+    assert (len(after) > len(before)) == some_keys
+    d = Drain("baldr", 0.0, 0.0, committed)
     d.batches += [p for p in q.recentProgress if p["numInputRows"] > 0]
     check_drain(d, backlog, work)
     assert d.problems == []
