@@ -71,8 +71,10 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
 
 def get_spark(app_name: str = "bifrost_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build a tuned session.  Local master is for tests/bench only; on a
-    cluster the same confs ride along via spark-submit."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cluster the same confs ride along via spark-submit.  The local master
+    has one slot per core this process may run on, unless
+    ``SPARK_GRAFT_CPUS`` says otherwise."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
     builder = (

@@ -11,17 +11,16 @@ the engine the same wire format, so a consumer of the reference's
 baldr output" completion of A7 (SURVEY.md §2, §7.4).
 
 Distribution shape:
-  * WRITER — the message stream is hash-partitioned on (topic,
-    partition) into defaultParallelism tasks (an explicit count, so
-    adaptive execution cannot fold a small batch onto one task); each task
-    splits its rows into per-key runs sorted by offset, checks and frames
-    every run, then streams each through gzip into a hidden temp name that
-    is renamed to `<root>/<group>/<topic>/partition=<p>/
+  * WRITER — the engine's one offset-named object writer
+    (`streaming/archive.py:write_offset_named`, shared with the parquet
+    leaf writer) with the baldr encoder: each task checks every per-key
+    run (gap-free offsets, no null payload), frames it and gzips it
+    (mtime 0) before it opens any file, then writes each object to a
+    hidden temp name renamed to `<root>/<group>/<topic>/partition=<p>/
     <first-offset %010d>.baldr.gz` (the reference's object key, s3.clj:
     15-20), so an object appears whole or not at all.  Payload bytes never
     pass through the driver; each file is written by exactly one task.
-    Paths are plain `open()` — file:// and mounted stores here; an fsspec
-    handle slots in for object stores.
+    Paths are plain `open()`: local or mounted paths.
   * READER — Spark's `binaryFile` source lists and reads whole files in
     parallel (one row per file), and an Arrow-batched `mapInPandas`
     gunzips + unframes each file, reconstructing (topic, partition,
@@ -36,16 +35,15 @@ import io
 import os
 import re
 import struct
-import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from bifrost_spark.streaming import archive
 
 _LEN = struct.Struct(">q")  # baldr: 8-byte big-endian record length
 _PATH_RE = re.compile(r"/([^/]+)/partition=(\d+)/(\d{10})\.baldr\.gz$")
-_MANIFEST_SCHEMA = (
-    "topic string, partition int, first_offset long, n_records long, path string"
-)
 
 
 def frame_records(values: list[bytes]) -> bytes:
@@ -72,6 +70,37 @@ def unframe_records(data: bytes) -> list[bytes]:
     return out
 
 
+def _baldr_object(run: pa.Table, key: str) -> bytes:
+    """One offset-sorted run as a gzip stream of baldr frames.  The gzip
+    header names the object and its mtime is 0, so the bytes are stable
+    across runs (re-upload idempotence is checkable by digest)."""
+    where = os.path.dirname(key)
+    offsets, values, n = run["offset"], run["value"], run.num_rows
+    first, last = offsets[0].as_py(), offsets[-1].as_py()
+    # The wire format encodes ONLY the first offset (in the file name);
+    # read-back reconstructs offset = first + frame index.  That is
+    # correct only for a gap-free unique run — enforce it here rather
+    # than silently mis-assigning offsets on read (gaps arise from
+    # compacted/transactional Kafka topics).
+    if last - first + 1 != n or pc.count_distinct(offsets).as_py() != n:
+        raise ValueError(
+            f"non-contiguous offset run for {where}: [{first}..{last}] holds "
+            f"{n} records — baldr framing cannot represent offset gaps; "
+            "compact/renumber upstream or archive as parquet (which stores offsets)"
+        )
+    if values.null_count:
+        raise ValueError(
+            f"null payload at {where} offset "
+            f"{offsets.filter(values.is_null())[0].as_py()} — baldr framing has "
+            "no null record (e.g. a Kafka tombstone); filter tombstones "
+            "upstream or archive as parquet (which stores nulls)"
+        )
+    buf = io.BytesIO()
+    with gzip.GzipFile(key, "wb", fileobj=buf, mtime=0) as gz:
+        gz.write(frame_records(values.to_pylist()))
+    return buf.getvalue()
+
+
 def write_baldr_archive(
     df: DataFrame, root: str, group_id: str = "bifrost-group"
 ) -> DataFrame:
@@ -79,85 +108,31 @@ def write_baldr_archive(
     as offset-named ``.baldr.gz`` objects; returns the written manifest
     (topic, partition, first_offset, n_records, path) as a DataFrame.
 
-    One shuffle (repartition on the key into defaultParallelism tasks) +
-    in-task sort; every file is produced by a single task streaming gzip
-    — the same per-(topic, partition) single-writer discipline as the
-    reference's consumer FSM.  A null payload or an offset gap raises
-    ``ValueError`` before the task opens any file.
+    Runs now, in one Spark action (``archive.write_offset_named``): every
+    file is produced by a single task — the same per-(topic, partition)
+    single-writer discipline as the reference's consumer FSM.  A null
+    payload or an offset gap raises ``ValueError`` before the task opens
+    any file.  The manifest is a local frame, so no later action on it
+    can re-execute the write.
     """
-    import pandas as pd
-
-    def write_partition(batches):
-        chunks = [b for b in batches if not b.empty]
-        if not chunks:
-            return
-        rows = pd.concat(chunks, ignore_index=True)
-        # check and frame every run before any file is opened, so a bad
-        # run leaves no object behind
-        runs = []
-        for (topic, part), grp in rows.groupby(["topic", "partition"], sort=True):
-            grp = grp.sort_values("offset")
-            first = int(grp["offset"].iloc[0])
-            last = int(grp["offset"].iloc[-1])
-            # The wire format encodes ONLY the first offset (in the file
-            # name); read-back reconstructs offset = first + frame index.
-            # That is correct only for a gap-free unique run — enforce it
-            # here rather than silently mis-assigning offsets on read
-            # (gaps arise from compacted/transactional Kafka topics).
-            if last - first + 1 != len(grp) or not grp["offset"].is_unique:
-                raise ValueError(
-                    f"non-contiguous offset run for {topic}/partition={part}: "
-                    f"[{first}..{last}] holds {len(grp)} records — baldr "
-                    "framing cannot represent offset gaps; compact/renumber "
-                    "upstream or archive as parquet (which stores offsets)"
-                )
-            nulls = grp["offset"][grp["value"].isna()]
-            if len(nulls):
-                raise ValueError(
-                    f"null payload at {topic}/partition={part} offset "
-                    f"{int(nulls.iloc[0])} — baldr framing has no null record "
-                    "(e.g. a Kafka tombstone); filter tombstones upstream or "
-                    "archive as parquet (which stores nulls)"
-                )
-            runs.append((topic, int(part), first, len(grp), frame_records([bytes(v) for v in grp["value"]])))
-        for topic, part, first, n, framed in runs:
-            d = os.path.join(root, group_id, str(topic), f"partition={part}")
-            os.makedirs(d, exist_ok=True)
-            path = os.path.join(d, f"{first:010d}.baldr.gz")
-            # write a hidden temp name, then rename: each object appears
-            # whole (the reference uploads a finished temp file,
-            # kafka.clj:71-72).  The gzip header names the object, not the
-            # temp file, and mtime=0 → byte-stable output across runs
-            # (reproducible objects make re-upload idempotence checkable
-            # by digest)
-            tmp = os.path.join(d, f".{first:010d}.{uuid.uuid4().hex}.tmp")
-            with open(tmp, "wb") as fh:
-                with gzip.GzipFile(path, "wb", fileobj=fh, mtime=0) as gz:
-                    gz.write(framed)
-            os.replace(tmp, path)
-            yield pd.DataFrame(
-                {
-                    "topic": [topic],
-                    "partition": [part],
-                    "first_offset": [first],
-                    "n_records": [n],
-                    "path": [path],
-                }
-            )
-
-    msgs = df.select("topic", "partition", "offset", "value")
-    # an explicit task count: an unsized repartition of a small batch is
-    # coalesced by adaptive execution onto one task
-    n_tasks = df.sparkSession.sparkContext.defaultParallelism
-    # run the side-effecting write NOW, exactly once, in one job: the
-    # manifest (one row per key) is collected and handed back as a local
-    # frame, so no later action on it can re-execute the write
-    rows = (
-        msgs.repartition(n_tasks, "topic", "partition")
-        .mapInPandas(write_partition, schema=_MANIFEST_SCHEMA)
-        .collect()
+    rows = archive.write_offset_named(
+        df.select("topic", "partition", "offset", "value"),
+        root,
+        group_id,
+        "baldr.gz",
+        _baldr_object,
     )
-    return df.sparkSession.createDataFrame(rows, _MANIFEST_SCHEMA)
+    return df.sparkSession.createDataFrame(rows, archive.MANIFEST_SCHEMA)
+
+
+def _decode_object(path: str, data: bytes) -> tuple[str, int, int, list[bytes]]:
+    """A ``.baldr.gz`` object's (topic, partition, first offset, payloads),
+    the key parsed from its path."""
+    m = _PATH_RE.search(path)
+    if not m:
+        raise ValueError(f"unrecognized baldr path {path!r}")
+    values = unframe_records(gzip.decompress(data))
+    return m.group(1), int(m.group(2)), int(m.group(3)), values
 
 
 def read_baldr_archive(spark: SparkSession, root: str, group_id: str = "bifrost-group") -> DataFrame:
@@ -176,11 +151,7 @@ def read_baldr_archive(spark: SparkSession, root: str, group_id: str = "bifrost-
     def unframe(batches):
         for pdf in batches:
             for path, content in zip(pdf["path"], pdf["content"]):
-                m = _PATH_RE.search(path)
-                if not m:
-                    raise ValueError(f"unrecognized baldr path {path!r}")
-                topic, part, first = m.group(1), int(m.group(2)), int(m.group(3))
-                values = unframe_records(gzip.decompress(bytes(content)))
+                topic, part, first, values = _decode_object(path, bytes(content))
                 yield pd.DataFrame(
                     {
                         "topic": topic,
@@ -228,12 +199,8 @@ def register_baldr_source(spark: SparkSession) -> None:
             return [_BaldrFilePartition(p) for p in _discover_baldr_files(self._root)]
 
         def read(self, partition):
-            m = _PATH_RE.search(partition.path)
-            if not m:
-                raise ValueError(f"unrecognized baldr path {partition.path!r}")
-            topic, part, first = m.group(1), int(m.group(2)), int(m.group(3))
             with open(partition.path, "rb") as fh:
-                values = unframe_records(gzip.decompress(fh.read()))
+                topic, part, first, values = _decode_object(partition.path, fh.read())
             for i, v in enumerate(values):
                 yield (topic, part, first + i, v)
 

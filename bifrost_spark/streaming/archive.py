@@ -8,7 +8,7 @@ Reference behavior being re-expressed (uswitch/bifrost):
     (kafka.clj:103-120) → one micro-batch per ``trigger(processingTime=…)``
   * upload under ``<group>/<topic>/partition=<p>/<%010d first-offset>``
     (s3.clj:15-20) → ``partitionBy("topic","partition")`` parquet layout;
-    offset-named leaf files via the foreachBatch writer below
+    offset-named objects via ``write_offset_named`` below
   * commit offset only after a successful upload (s3.clj:40-80 FSM) →
     Structured Streaming checkpoint: offsets WAL before the batch, commit
     log after sink success — same at-least-once contract, strengthened to
@@ -18,15 +18,23 @@ At scale: the Kafka source maps 1 Kafka partition → 1 task (A5's
 per-partition parallelism), ``maxOffsetsPerTrigger`` is the backpressure
 bound (A18), and the sink's partitioned layout is exactly the reference's
 Hive-style object keying (A11), so downstream engines partition-prune.
+
+Storage: the manifest file sink (``start_archive``) writes any Hadoop
+path, object stores included (``cloud.py`` configures the connector).
+The two offset-named writers (``start_offset_named_archive``,
+``start_baldr_archive``) write each object from inside its Spark task
+with plain file calls, so their root is a local or mounted path.
 """
 
 from __future__ import annotations
 
-import re
+import os
+import uuid
 from dataclasses import dataclass, field
-from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
@@ -38,14 +46,6 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
-from pyspark.sql.window import Window
-
-from bifrost_spark.streaming._sink import hadoop_fs
-
-# A staged file of the offset-named writer: its ``leaf=`` directory holds
-# the final relative path (Spark escapes partition values in directory
-# names, hence ``unquote``)
-_STAGED_LEAF = re.compile(r"/leaf=([^/]*)/[^/]+$")
 
 # The Kafka-source column contract (subset we archive).  When reading from a
 # real Kafka cluster these come from format("kafka") verbatim.
@@ -58,6 +58,8 @@ MESSAGE_SCHEMA = StructType(
         StructField("ts", TimestampType()),
     ]
 )
+# One row per object an offset-named writer wrote
+MANIFEST_SCHEMA = "topic string, partition int, first_offset long, n_records long, path string"
 
 
 @dataclass
@@ -92,10 +94,6 @@ class ArchiveConfig:
     # (kafka.security.protocol, kafka.sasl.jaas.config, …), source options
     # are bare (failOnDataLoss, minPartitions, …)
     kafka_options: dict[str, str] = field(default_factory=dict)
-    # uploader concurrency analog (A17): write tasks of the parquet and
-    # offset-named writers; None means defaultParallelism (one per core),
-    # which the baldr writer always uses
-    sink_partitions: int | None = None
     # sink wire format: "parquet" (columnar, default) | "baldr"
     # (byte-exact reference format via sources/baldr.py)
     sink_format: str = "parquet"
@@ -150,14 +148,15 @@ def apply_topic_filter(df: DataFrame, cfg: ArchiveConfig) -> DataFrame:
     return df
 
 
-def _by_key(df: DataFrame, cfg: ArchiveConfig) -> DataFrame:
-    """Hash-partition messages on (topic, partition) into ``sink_partitions
-    or defaultParallelism`` tasks: the write is sized by cores, not by
-    input splits or keys, and each key stays in one task, so each leaf is
-    written as one file (the reference's per-partition writers behind a
-    fixed uploader pool, s3.clj:117-124)."""
-    n_tasks = cfg.sink_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n_tasks, "topic", "partition")
+def _by_key(df: DataFrame) -> DataFrame:
+    """Hash-partition messages on (topic, partition) into
+    ``defaultParallelism`` tasks: every writer's write is sized by cores,
+    not by input splits or keys, and each key stays in one task, so each
+    leaf is written by one task (the reference's per-partition writers
+    behind a fixed uploader pool, s3.clj:117-124).  The explicit count
+    also keeps adaptive execution from folding a small batch onto one
+    task."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, "topic", "partition")
 
 
 def start_archive(spark: SparkSession, cfg: ArchiveConfig) -> StreamingQuery:
@@ -186,7 +185,7 @@ def start_archive(spark: SparkSession, cfg: ArchiveConfig) -> StreamingQuery:
         F.sum(F.coalesce(F.length("value"), F.lit(0))).alias("payload_bytes"),
     )
     return (
-        _by_key(src, cfg).writeStream.format("parquet")
+        _by_key(src).writeStream.format("parquet")
         .option("path", cfg.output_path)
         .option("checkpointLocation", cfg.checkpoint_path)
         .partitionBy("topic", "partition")
@@ -196,82 +195,108 @@ def start_archive(spark: SparkSession, cfg: ArchiveConfig) -> StreamingQuery:
     )
 
 
-def start_offset_named_archive(spark: SparkSession, cfg: ArchiveConfig) -> StreamingQuery:
-    """foreachBatch writer producing the reference's exact leaf naming:
-    one file per (topic, partition) per rotation, named
-    ``%010d.parquet`` by the batch's first offset (s3.clj:15-20,28) —
-    idempotent on re-upload after crash, same as the reference (same first
-    offset → same key → overwrite).
+def write_offset_named(df: DataFrame, root: str, group_id: str, suffix: str, encode) -> list[Row]:
+    """Write each (topic, partition) run of a message frame as ONE object
+    ``<root>/<group_id>/<topic>/partition=<p>/<first offset %010d>.<suffix>``
+    (the reference's key, s3.clj:15-20) and return the manifest rows
+    (``MANIFEST_SCHEMA``, one per key).  ``encode(run, key)`` turns a run,
+    an Arrow table sorted by offset, into the object's bytes; ``key`` is
+    the object's path under the group.  It raises to refuse a run.
 
-    Batch-local plan: one scan and one distributed write per micro-batch
-    (two Spark jobs under adaptive execution), in ``_by_key``'s core-sized
-    tasks; hashing keeps each key in one task, so each staged leaf holds
-    one file.  The key's first offset is a window ``min(offset)`` inside
-    that job (no extra exchange: the repartition meets its distribution).
-    The batch is staged under ONE partition column, ``leaf``, holding the
-    final relative path ``<topic>/partition=<p>/<%010d>.parquet``, so each
-    leaf costs one staging directory (every directory the local Hadoop
-    FileSystem creates forks a ``chmod``).  The driver lists every staged
-    file with ONE ``globStatus`` and renames each to its leaf via the
-    Hadoop FileSystem API (file://, s3a://, abfss://), concurrently across
-    keys: O(keys) metadata round-trips, not O(keys) Spark jobs.
+    One action: ``_by_key``'s exchange, then one ``mapInArrow`` task per
+    slice that sorts its rows, splits them into per-key runs, encodes
+    every run before it opens any file (a refused run leaves no object),
+    writes each object to a hidden temp name in its directory and renames
+    it into place, so an object appears whole or not at all (the
+    reference uploads a finished temp file, kafka.clj:71-72).  A replayed
+    batch has the same first offsets, so it overwrites the same keys.
+    Payload bytes never pass through the driver.
     """
 
-    def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        spark_b = batch.sparkSession
-        staging = f"{cfg.output_path}/.staging-epoch-{epoch_id}"
-        first_offset = F.min("offset").over(Window.partitionBy("topic", "partition"))
-        (
-            _by_key(batch, cfg)
-            .withColumn(
-                "leaf",
-                F.format_string(
-                    "%s/partition=%d/%010d.parquet", "topic", "partition", first_offset
-                ),
-            )
-            .drop("topic", "partition")
-            .write.mode("overwrite")
-            .partitionBy("leaf")
-            .parquet(staging)
+    def write_task(batches):
+        chunks = [b for b in batches if b.num_rows]
+        if not chunks:
+            return
+        order = [("topic", "ascending"), ("partition", "ascending")]
+        rows = pa.Table.from_batches(chunks).sort_by(order + [("offset", "ascending")])
+        # one row per key in the rows' order: the runs are consecutive slices
+        counts = (
+            rows.group_by(["topic", "partition"]).aggregate([("offset", "count")]).sort_by(order)
+        )
+        manifest, encoded, start = [], [], 0
+        for topic, part, n in zip(
+            *(counts[c].to_pylist() for c in ("topic", "partition", "offset_count"))
+        ):
+            run = rows.slice(start, n)
+            start += n
+            first = run["offset"][0].as_py()
+            key = f"{topic}/partition={part}/{first:010d}.{suffix}"
+            encoded.append(encode(run, key))
+            manifest.append((topic, part, first, n, os.path.join(root, group_id, key)))
+        for (*_, path), data in zip(manifest, encoded):
+            tmp = os.path.join(os.path.dirname(path), f".{uuid.uuid4().hex}.tmp")
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            with open(tmp, "wb") as fh:
+                fh.write(data)
+            os.replace(tmp, path)
+        topics, parts, firsts, ns, paths = zip(*manifest)
+        yield pa.RecordBatch.from_pydict(
+            {
+                "topic": topics,
+                "partition": pa.array(parts, pa.int32()),
+                "first_offset": firsts,
+                "n_records": ns,
+                "path": paths,
+            }
         )
 
-        HPath = spark_b._jvm.org.apache.hadoop.fs.Path
-        fs = hadoop_fs(spark_b, staging)
-        leaves: dict[str, list] = {}
-        for st in fs.globStatus(HPath(f"{staging}/leaf=*/part-*")) or []:
-            src = st.getPath()
-            leaf = unquote(_STAGED_LEAF.search(src.toString()).group(1))
-            leaves.setdefault(leaf, []).append(src)
+    return _by_key(df).mapInArrow(write_task, MANIFEST_SCHEMA).collect()
 
-        def move_leaf(item: tuple) -> None:
-            leaf, staged = item
-            if len(staged) != 1:
-                raise RuntimeError(
-                    f"expected exactly 1 staged file for {leaf}, got {len(staged)}"
-                )
-            dst = HPath(f"{cfg.output_path}/{cfg.group_id}/{leaf}")
-            fs.mkdirs(dst.getParent())
-            # crash-replay idempotence: same first offset → same key →
-            # overwrite (s3.clj:15-20 semantics)
-            fs.delete(dst, False)
-            if not fs.rename(staged[0], dst):
-                raise RuntimeError(f"rename failed for {dst}")
 
-        # threads start on demand, at most one per leaf
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            # list() re-raises the first worker exception → batch fails →
-            # offsets not committed → replay, preserving at-least-once
-            list(pool.map(move_leaf, leaves.items()))
-        fs.delete(HPath(staging), True)
+def _parquet_object(run: pa.Table, key: str) -> bytes:
+    """A run's ``offset, value, ts`` as one parquet file.  No embedded
+    Arrow schema, no statistics on the opaque payload and no dictionaries
+    (offsets and payloads do not repeat): each only adds bytes."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(
+        run.select(["offset", "value", "ts"]),
+        buf,
+        compression="zstd",
+        use_dictionary=False,
+        store_schema=False,
+        write_statistics=["offset", "ts"],
+    )
+    return buf.getvalue().to_pybytes()
 
-    src = apply_topic_filter(build_source(spark, cfg), cfg)
+
+def _start_batch_writer(spark: SparkSession, cfg: ArchiveConfig, write) -> StreamingQuery:
+    """The offset-named writers' stream: one ``write(batch)`` per rotation;
+    the checkpoint commits the batch's offsets only after it returns."""
     return (
-        src.writeStream.foreachBatch(write_batch)
+        apply_topic_filter(build_source(spark, cfg), cfg)
+        .writeStream.foreachBatch(lambda batch, _epoch: write(batch))
         .option("checkpointLocation", cfg.checkpoint_path)
         .trigger(processingTime=f"{cfg.rotation_interval_secs} seconds")
         .start()
+    )
+
+
+def start_offset_named_archive(spark: SparkSession, cfg: ArchiveConfig) -> StreamingQuery:
+    """The reference's exact leaf naming in parquet: one file per (topic,
+    partition) per rotation, ``<group>/<topic>/partition=<p>/%010d.parquet``
+    named by the batch's first offset (s3.clj:15-20,28), holding ``offset,
+    value, ts``.  Each batch goes through ``write_offset_named``: one Spark
+    action, each file written and renamed into place by its task, so the
+    root is a local or mounted path (object stores: ``start_archive``).
+    Idempotent on replay after a crash, same as the reference: same first
+    offset → same key → overwrite.
+    """
+    return _start_batch_writer(
+        spark,
+        cfg,
+        lambda batch: write_offset_named(
+            batch, cfg.output_path, cfg.group_id, "parquet", _parquet_object
+        ),
     )
 
 
@@ -286,13 +311,6 @@ def start_baldr_archive(spark: SparkSession, cfg: ArchiveConfig) -> StreamingQue
     object-key idempotence of s3.clj:15-20 made digest-checkable."""
     from bifrost_spark.sources.baldr import write_baldr_archive
 
-    def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        write_baldr_archive(batch, cfg.output_path, cfg.group_id)
-
-    src = apply_topic_filter(build_source(spark, cfg), cfg)
-    return (
-        src.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", cfg.checkpoint_path)
-        .trigger(processingTime=f"{cfg.rotation_interval_secs} seconds")
-        .start()
+    return _start_batch_writer(
+        spark, cfg, lambda batch: write_baldr_archive(batch, cfg.output_path, cfg.group_id)
     )

@@ -186,3 +186,27 @@ def test_baldr_write_materializes_immediately(spark, messages, tmp_path):
     root = str(tmp_path / "arch_eager")
     write_baldr_archive(messages, root)
     assert glob.glob(f"{root}/**/*.baldr.gz", recursive=True)
+
+
+def test_baldr_write_splits_many_keys_per_task(spark, tmp_path):
+    """Each write task holds many keys (a 64-key benchmark backlog over
+    ``defaultParallelism`` tasks): every object holds exactly its own
+    key's run, and the archive reads back equal to the input."""
+    from perfbench import backlog as pb_backlog
+
+    backlog = pb_backlog.generate(str(tmp_path / "in"), seed=13, n_files=3)
+    assert len(backlog.runs) > spark.sparkContext.defaultParallelism
+    root = str(tmp_path / "arch")
+    for f in sorted(glob.glob(f"{backlog.path}/*.parquet")):  # one rotation each
+        manifest = write_baldr_archive(spark.read.parquet(f), root).collect()
+        assert len(manifest) == len(backlog.runs)
+    got = {
+        (r.topic, r.partition, r.offset): bytes(r.value)
+        for r in read_baldr_archive(spark, root).collect()
+    }
+    expected = {
+        (t, p, base + i): v
+        for (t, p), (base, values) in backlog.runs.items()
+        for i, v in enumerate(values)
+    }
+    assert got == expected

@@ -12,10 +12,7 @@ from __future__ import annotations
 
 import glob
 import os
-import re
-import threading
 import time
-from urllib.parse import unquote
 
 import pytest
 from pyspark.sql import functions as F
@@ -182,10 +179,7 @@ def test_topic_filter(spark, staged_messages, tmp_path):
     assert "click" not in topics and topics, f"blacklist leaked: {topics}"
 
 
-# sink_partitions=2: far fewer write tasks than keys, so one task writes
-# many leaves; hash partitioning must still give one file per leaf
-@pytest.mark.parametrize("sink_partitions", [None, 2])
-def test_offset_named_leaves(spark, staged_messages, tmp_path, sink_partitions):
+def test_offset_named_leaves(spark, staged_messages, tmp_path):
     in_path, n_msgs = staged_messages
     cfg = ArchiveConfig(
         output_path=str(tmp_path / "out"),
@@ -195,7 +189,6 @@ def test_offset_named_leaves(spark, staged_messages, tmp_path, sink_partitions):
         max_files_per_trigger=2,  # ≥2 rotations → ≥2 leaves per hot partition
         rotation_interval_secs=1,
         group_id="g1",
-        sink_partitions=sink_partitions,
     )
     _drain(start_offset_named_archive(spark, cfg))
 
@@ -283,140 +276,30 @@ def test_write_is_sized_by_cores(spark, staged_messages, tmp_path, start):
     assert list(tasks.values()).count(n) == n_batches, tasks
 
 
-class _FaultyFS:
-    """Delegating proxy over a Hadoop FileSystem that fails the offset
-    writer's rename step: every ``rename`` after the first ``renames_ok``
-    raises, or (``renames_ok=None``) the staging directory's delete
-    raises after all renames went through."""
-
-    def __init__(self, fs, renames_ok):
-        self._fs, self._ok, self._renamed = fs, renames_ok, 0
-        self._lock = threading.Lock()
-
-    def __getattr__(self, name):
-        return getattr(self._fs, name)
-
-    def rename(self, src, dst):
-        with self._lock:
-            if self._ok is not None and self._renamed >= self._ok:
-                raise OSError(f"injected: rename after {self._renamed} renames")
-            self._renamed += 1
-        return self._fs.rename(src, dst)
-
-    def delete(self, path, recursive):
-        if self._ok is None and recursive and ".staging-epoch-" in path.toString():
-            raise OSError("injected: staging delete")
-        return self._fs.delete(path, recursive)
-
-
-def _staging_layout(staging: str) -> tuple[list[str], list[str]]:
-    """Subdirectories and data files (no ``_SUCCESS``, no hidden ``.crc``)
-    of a staging directory, relative to it."""
-    dirs, files = [], []
-    for root, ds, fs in os.walk(staging):
-        rel = os.path.relpath(root, staging)
-        dirs += [os.path.normpath(os.path.join(rel, d)) for d in ds]
-        files += [
-            os.path.normpath(os.path.join(rel, f))
-            for f in fs
-            if not f.startswith((".", "_"))
-        ]
-    return dirs, files
-
-
-@pytest.mark.parametrize(
-    "renames_ok",
-    [0, 5, None, "lookup"],
-    ids=["first-rename", "after-5-renames", "staging-delete", "after-staged-write"],
-)
-def test_offset_named_crash_in_rename_step_replays_exactly_once(
-    spark, tmp_path, monkeypatch, renames_ok
+@pytest.mark.parametrize("some_keys", [True, False], ids=["some-keys", "all-keys"])
+@pytest.mark.parametrize("writer", ["offset", "baldr"])
+def test_crash_after_write_replays_exactly_once(
+    spark, tmp_path, monkeypatch, writer, some_keys
 ):
-    """Kill the offset-named writer inside its second batch (before the
-    checkpoint commit) after the staged write, in its rename step or at
-    the staging delete; restart from the same checkpoint with the real
-    FileSystem and drain: every (topic, partition, offset) is archived
-    exactly once, leaf names are first offsets and chain with no gap, and
-    no staging directory survives (``perfbench/drain.py``'s
-    ``check_drain`` predicates).  The staging directory a crash leaves is
-    one ``leaf=`` level deep."""
+    """Kill an offset-named writer (parquet leaves or baldr objects) in
+    its second batch after it wrote some or all of the batch's objects
+    (before the checkpoint commit), restart from the same checkpoint and
+    drain: the replay rewrites the same object names with the same bytes,
+    and ``check_drain`` finds every (topic, partition, offset) exactly
+    once, leaves named by first offset and chained (and, for baldr, the
+    bytes equal to the input).  The seed-5 backlog has 64 keys, more than
+    ``defaultParallelism``, so tasks write many objects each."""
+    import hashlib
+
     from perfbench import backlog as pb_backlog
-    from perfbench.drain import GROUP, Drain, check_drain
+    from perfbench.drain import GROUP, WRITERS, Drain, check_drain
 
     from bifrost_spark.streaming import archive
 
     work = str(tmp_path)
     backlog = pb_backlog.generate(str(tmp_path / "in"), seed=5, n_files=2)
-    cfg = ArchiveConfig(
-        output_path=str(tmp_path / "out-offset"),
-        checkpoint_path=str(tmp_path / "ckpt"),
-        source="file",
-        input_path=backlog.path,
-        max_files_per_trigger=1,
-        rotation_interval_secs=0,
-        group_id=GROUP,
-    )
-    real_fs, calls = archive.hadoop_fs, []
-
-    def faulty_fs(spark_b, path):
-        # one lookup per batch, right after the staged write: the second
-        # batch's lookup fails or hands out the faulty FS
-        calls.append(real_fs(spark_b, path))
-        if len(calls) == 2:
-            if renames_ok == "lookup":
-                raise OSError("injected: FileSystem lookup after the staged write")
-            calls[-1] = _FaultyFS(calls[-1], renames_ok)
-        return calls[-1]
-
-    monkeypatch.setattr(archive, "hadoop_fs", faulty_fs)
-    q = start_offset_named_archive(spark, cfg)
-    with pytest.raises(Exception, match="injected"):
-        q.processAllAvailable()
-    q.stop()
-    committed = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    assert len(committed) == 1 and len(calls) == 2
-    dirs, files = _staging_layout(str(tmp_path / "out-offset" / ".staging-epoch-1"))
-    assert dirs and all(re.fullmatch(r"leaf=[^/]+", d) for d in dirs), dirs
-    # a leaf directory is named by the leaf's path under the group
-    for d in dirs:
-        assert re.fullmatch(r"t\d\d/partition=\d/\d{10}\.parquet", unquote(d[5:])), d
-    if renames_ok == "lookup":  # staged, nothing renamed: one file per leaf
-        assert sorted(os.path.dirname(f) for f in files) == sorted(dirs)
-        assert all(re.fullmatch(r"leaf=[^/]+/part-[^/]+", f) for f in files), files
-    elif renames_ok is None:  # every leaf was renamed, the staging dir kept
-        assert files == []
-    else:
-        assert calls[1]._renamed == renames_ok
-
-    monkeypatch.setattr(archive, "hadoop_fs", real_fs)
-    q = start_offset_named_archive(spark, cfg)
-    _drain(q)
-    d = Drain("offset", 0.0, 0.0, committed)
-    d.batches += [p for p in q.recentProgress if p["numInputRows"] > 0]
-    check_drain(d, backlog, work)
-    assert d.problems == []
-
-
-@pytest.mark.parametrize("some_keys", [True, False], ids=["some-keys", "all-keys"])
-def test_baldr_crash_after_write_replays_exactly_once(
-    spark, tmp_path, monkeypatch, some_keys
-):
-    """Kill the baldr writer in its second batch after it wrote some or
-    all of the batch's objects (before the checkpoint commit), restart
-    from the same checkpoint and drain: the replay rewrites the same
-    object names with the same bytes, and ``check_drain`` finds every
-    (topic, partition, offset) exactly once, leaves named by first offset
-    and chained, and the bytes equal to the input."""
-    import hashlib
-
-    from perfbench import backlog as pb_backlog
-    from perfbench.drain import GROUP, Drain, check_drain
-
-    from bifrost_spark.sources import baldr
-
-    work = str(tmp_path)
-    backlog = pb_backlog.generate(str(tmp_path / "in"), seed=5, n_files=2)
-    out = tmp_path / "out-baldr"
+    assert len(backlog.runs) > spark.sparkContext.defaultParallelism
+    out = tmp_path / f"out-{writer}"
     cfg = ArchiveConfig(
         output_path=str(out),
         checkpoint_path=str(tmp_path / "ckpt"),
@@ -426,24 +309,28 @@ def test_baldr_crash_after_write_replays_exactly_once(
         rotation_interval_secs=0,
         group_id=GROUP,
     )
-    real_write, written = baldr.write_baldr_archive, []
+    real_write, written = archive.write_offset_named, []
 
-    def crashing_write(batch, root, group_id):
-        if written:  # the second batch
-            if some_keys:
-                batch = batch.filter(F.col("partition") < 2)
-            written.append(real_write(batch, root, group_id).count())
-            raise OSError("injected: crash after the baldr write")
-        written.append(real_write(batch, root, group_id).count())
+    def crashing_write(batch, *args):
+        crash = bool(written)  # the second batch
+        if crash and some_keys:
+            batch = batch.filter(F.col("partition") < 2)
+        rows = real_write(batch, *args)
+        written.append(len(rows))
+        if crash:
+            raise OSError("injected: crash after the write")
+        return rows
+
+    suffix = "parquet" if writer == "offset" else "baldr.gz"
 
     def digests() -> dict[str, str]:
         return {
             str(f): hashlib.sha256(f.read_bytes()).hexdigest()
-            for f in out.glob(f"{GROUP}/*/partition=*/*.baldr.gz")
+            for f in out.glob(f"{GROUP}/*/partition=*/*.{suffix}")
         }
 
-    monkeypatch.setattr(baldr, "write_baldr_archive", crashing_write)
-    q = start_baldr_archive(spark, cfg)
+    monkeypatch.setattr(archive, "write_offset_named", crashing_write)
+    q = WRITERS[writer](spark, cfg)
     with pytest.raises(Exception, match="injected"):
         q.processAllAvailable()
     q.stop()
@@ -452,13 +339,13 @@ def test_baldr_crash_after_write_replays_exactly_once(
     before = digests()
     assert len(before) == sum(written) and 0 < written[1]
 
-    monkeypatch.setattr(baldr, "write_baldr_archive", real_write)
-    q = start_baldr_archive(spark, cfg)
+    monkeypatch.setattr(archive, "write_offset_named", real_write)
+    q = WRITERS[writer](spark, cfg)
     _drain(q)
     after = digests()
     assert {f: after.get(f) for f in before} == before  # same bytes on replay
     assert (len(after) > len(before)) == some_keys
-    d = Drain("baldr", 0.0, 0.0, committed)
+    d = Drain(writer, 0.0, 0.0, committed)
     d.batches += [p for p in q.recentProgress if p["numInputRows"] > 0]
     check_drain(d, backlog, work)
     assert d.problems == []

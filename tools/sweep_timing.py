@@ -6,6 +6,10 @@ shapes per-round; this sweep is the audit tool that finds slow outliers
 in the other ~150 registered queries before they matter at scale.
 
 Usage: python tools/sweep_timing.py [--sf-dir DIR] [--runs N] [--only a,b]
+                                    [--plans DIR]
+
+``--plans DIR`` also writes each query's ``explain("formatted")`` to
+``DIR/<name>.txt`` (taken from the first run's frame, outside the timers).
 """
 
 from __future__ import annotations
@@ -27,7 +31,10 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--runs", type=int, default=1)
     ap.add_argument("--only", default="")
+    ap.add_argument("--plans", default=None, help="directory for <name>.txt explains")
     args = ap.parse_args()
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
 
     spark = get_spark("bifrost-sweep")
     spark.sparkContext.setLogLevel("ERROR")
@@ -45,13 +52,17 @@ def main() -> None:
     builds: dict[str, float] = {}
     for name in names:
         best = best_b = float("inf")
-        for _ in range(args.runs):
+        for run in range(args.runs):
             tb = time.perf_counter()
             df = qs[name](spark, args.sf_dir)
             t0 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
             best_b = min(best_b, t0 - tb)
+            if args.plans and run == 0:
+                with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
+                    f.write(df._sc._jvm.PythonSQLUtils.explainString(
+                        df._jdf.queryExecution(), "formatted"))
         timings[name] = round(best, 3)
         builds[name] = round(best_b, 3)
         print(f"{builds[name]:8.3f}b {timings[name]:8.3f}x  {name}", file=sys.stderr)
