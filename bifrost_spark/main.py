@@ -47,13 +47,14 @@ def load_config(path: str) -> ArchiveConfig:
 def run_compact(args) -> int:
     """Maintenance subcommand: fold small archive leaves/files (OPTIMIZE).
 
-    ``--layout offset`` compacts the offset-named layout
-    (streaming/compact.py); ``--layout manifest`` compacts a
-    ``_spark_metadata`` file-sink directory (streaming/manifest_compact.py
-    — run with the writing query stopped).  Prints one JSON stats line.
+    A path holding ``_spark_metadata`` is a manifest file sink
+    (streaming/manifest_compact.py — run with the writing query stopped);
+    any other path is an offset-named archive root (streaming/compact.py).
+    Both run on compact.py's crash-safe core.  Prints one JSON stats line.
     """
     from pyspark.sql import SparkSession
 
+    from bifrost_spark.streaming._sink import hadoop_fs
     from bifrost_spark.streaming.compact import compact_archive
     from bifrost_spark.streaming.manifest_compact import compact_manifest_sink
 
@@ -62,12 +63,13 @@ def run_compact(args) -> int:
     existing = SparkSession.getActiveSession()
     spark = existing or get_spark("bifrost-compact")
     try:
-        if args.layout == "offset":
-            stats = compact_archive(spark, args.path,
-                                    target_bytes=args.target_bytes)
-        else:
+        meta = spark._jvm.org.apache.hadoop.fs.Path(args.path + "/_spark_metadata")
+        if hadoop_fs(spark, args.path).exists(meta):
             stats = compact_manifest_sink(spark, args.path,
                                           target_bytes=args.target_bytes)
+        else:
+            stats = compact_archive(spark, args.path,
+                                    target_bytes=args.target_bytes)
         print(json.dumps(stats.__dict__))
     finally:
         if existing is None:
@@ -84,8 +86,6 @@ def main(argv: list[str] | None = None) -> int:
         "compact", help="fold small archive files (maintenance window)"
     )
     comp.add_argument("--path", required=True, help="archive root / sink dir")
-    comp.add_argument("--layout", choices=("offset", "manifest"),
-                      default="offset")
     comp.add_argument("--target-bytes", type=int, default=128 * 1024 * 1024)
     args = ap.parse_args(argv)
 

@@ -38,7 +38,7 @@ import struct
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
 from bifrost_spark.streaming import archive
 
@@ -103,36 +103,24 @@ def _baldr_object(run: pa.Table, key: str) -> bytes:
 
 def write_baldr_archive(
     df: DataFrame, root: str, group_id: str = "bifrost-group"
-) -> DataFrame:
+) -> list[Row]:
     """Write a message-shaped DataFrame (topic, partition, offset, value)
-    as offset-named ``.baldr.gz`` objects; returns the written manifest
-    (topic, partition, first_offset, n_records, path) as a DataFrame.
+    as offset-named ``.baldr.gz`` objects; returns the collected manifest
+    rows (topic, partition, first_offset, n_records, path), one per
+    object, as ``archive.write_offset_named`` does.
 
-    Runs now, in one Spark action (``archive.write_offset_named``): every
-    file is produced by a single task — the same per-(topic, partition)
-    single-writer discipline as the reference's consumer FSM.  A null
-    payload or an offset gap raises ``ValueError`` before the task opens
-    any file.  The manifest is a local frame, so no later action on it
-    can re-execute the write.
+    Runs now, in one Spark action: every file is produced by a single
+    task — the same per-(topic, partition) single-writer discipline as
+    the reference's consumer FSM.  A null payload or an offset gap raises
+    ``ValueError`` before the task opens any file.
     """
-    rows = archive.write_offset_named(
+    return archive.write_offset_named(
         df.select("topic", "partition", "offset", "value"),
         root,
         group_id,
         "baldr.gz",
         _baldr_object,
     )
-    return df.sparkSession.createDataFrame(rows, archive.MANIFEST_SCHEMA)
-
-
-def _decode_object(path: str, data: bytes) -> tuple[str, int, int, list[bytes]]:
-    """A ``.baldr.gz`` object's (topic, partition, first offset, payloads),
-    the key parsed from its path."""
-    m = _PATH_RE.search(path)
-    if not m:
-        raise ValueError(f"unrecognized baldr path {path!r}")
-    values = unframe_records(gzip.decompress(data))
-    return m.group(1), int(m.group(2)), int(m.group(3)), values
 
 
 def read_baldr_archive(spark: SparkSession, root: str, group_id: str = "bifrost-group") -> DataFrame:
@@ -151,11 +139,15 @@ def read_baldr_archive(spark: SparkSession, root: str, group_id: str = "bifrost-
     def unframe(batches):
         for pdf in batches:
             for path, content in zip(pdf["path"], pdf["content"]):
-                topic, part, first, values = _decode_object(path, bytes(content))
+                m = _PATH_RE.search(path)
+                if not m:
+                    raise ValueError(f"unrecognized baldr path {path!r}")
+                first = int(m.group(3))
+                values = unframe_records(gzip.decompress(bytes(content)))
                 yield pd.DataFrame(
                     {
-                        "topic": topic,
-                        "partition": part,
+                        "topic": m.group(1),
+                        "partition": int(m.group(2)),
                         "offset": [first + i for i in range(len(values))],
                         "value": values,
                     }
@@ -164,55 +156,3 @@ def read_baldr_archive(spark: SparkSession, root: str, group_id: str = "bifrost-
     return files.select("path", "content").mapInPandas(
         unframe, schema="topic string, partition int, offset long, value binary"
     )
-
-
-def _discover_baldr_files(root: str) -> list[str]:
-    import glob as _glob
-
-    return sorted(_glob.glob(f"{root}/*/*/partition=*/*.baldr.gz"))
-
-
-def register_baldr_source(spark: SparkSession) -> None:
-    """Register the Spark 4 Python DataSource wrapping the baldr layout:
-    ``spark.read.format("baldr").option("path", root)`` — one input
-    partition per object, so scan parallelism equals file count exactly
-    like the parquet reader.  Like ``read_baldr_archive``, offsets are
-    reconstructed as file-name offset + frame index, valid because the
-    writer enforces gap-free runs.
-
-    Defined inside the function so importing this module never requires
-    the DataSource API; the functional reader (``read_baldr_archive``)
-    remains the dependency-free path."""
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _BaldrFilePartition(InputPartition):
-        def __init__(self, path: str):
-            self.path = path
-
-    class _BaldrReader(DataSourceReader):
-        def __init__(self, options):
-            self._root = options.get("path")
-            if not self._root:
-                raise ValueError("baldr source requires .option('path', <root>)")
-
-        def partitions(self):
-            return [_BaldrFilePartition(p) for p in _discover_baldr_files(self._root)]
-
-        def read(self, partition):
-            with open(partition.path, "rb") as fh:
-                topic, part, first, values = _decode_object(partition.path, fh.read())
-            for i, v in enumerate(values):
-                yield (topic, part, first + i, v)
-
-    class _BaldrSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "baldr"
-
-        def schema(self):
-            return "topic string, partition int, offset long, value binary"
-
-        def reader(self, schema):
-            return _BaldrReader(self.options)
-
-    spark.dataSource.register(_BaldrSource)

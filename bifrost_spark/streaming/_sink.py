@@ -4,8 +4,8 @@ plus the one Hadoop FileSystem lookup of the streaming layer.
 Users of the sink: drift_monitor, centroid_drift, sketch_drift and
 fuzzy_dedup (stateless per batch), and sprt_monitor, cusum_monitor,
 page_hinkley and gst_monitor (state carried in their own output).
-Users of ``hadoop_fs``: compact, manifest_compact, upsert and
-``output_exists`` below.
+Users of ``hadoop_fs``: compact, manifest_compact, upsert, the CLI's
+``compact`` subcommand (main.py) and ``output_exists`` below.
 
 Replay contract (the replayable-source plus idempotent-sink recipe of
 Structured Streaming, SIGMOD 2018; the reference's "same first offset →

@@ -4,10 +4,9 @@
 micro-batch appends part files AND a metadata log entry under
 ``_spark_metadata/``; batch readers that see that directory trust the LOG,
 not the directory listing.  So compacting these archives is a two-phase
-problem the offset-named compactor (compact.py) doesn't have: rewriting
-the small part files is not enough — the manifest must atomically switch
-to the new file set, or readers keep scanning the old small files (or
-worse, miss data).
+problem the offset-named layout doesn't have: rewriting the small part
+files is not enough — the manifest must switch to the new file set, or
+readers keep scanning the old small files (or worse, miss data).
 
 Log format (Spark's ``FileStreamSinkLog``, stable since 2.0): one file per
 batch named ``<batchId>`` (or ``<batchId>.compact`` when Spark folds
@@ -17,55 +16,51 @@ blockReplication, blockSize, action}`` with action ``add``/``delete``;
 readers replay the latest ``.compact`` plus later deltas.
 
 This job (run in the maintenance window, query STOPPED — same operational
-contract as OPTIMIZE on a table format):
+contract as OPTIMIZE on a table format) runs on compact.py's core:
 
   1. replays the log to the live file set;
-  2. greedily bins small files per partition directory and rewrites each
-     bin as ONE file (``compacted-g<generation>-<stem-of-first-source>
-     .parquet``, deterministic → idempotent re-runs).  The generation
-     number is 1 + the highest generation among the bin's sources, so a
-     RE-compaction (compact → stream appends → compact) always writes a
-     FRESH name: no live listed file is ever renamed over or deleted
-     before the WAL commit, which is what makes "crash at ANY point
-     converges" actually hold across compaction cycles;
-  3. rewrites the log HISTORY in place: the latest valid log file gets
-     the complete new live set, every earlier valid log file becomes an
-     empty batch (version line only).  Spark 4's replay unions the adds
-     of all valid batches (the v1 ``delete`` action is no longer
-     honored), so content — not actions — must carry the change.  The
-     batch-id structure (which the reader derives ARITHMETICALLY from
+  2. bins small files per partition directory and rewrites each bin as
+     ONE file (``compacted-g<generation>-<stem-of-first-source>.parquet``,
+     deterministic → idempotent re-runs).  The generation number is 1 +
+     the highest generation among the bin's sources, so a RE-compaction
+     (compact → stream appends → compact) always writes a FRESH name that
+     no log lists until the commit: it is written in place, and an
+     unlisted ``compacted-*`` file is garbage the next run sweeps;
+  3. rewrites the log HISTORY: each valid log file is written under its
+     staged name, the latest with the complete new live set, every
+     earlier one as an empty batch (version line only).  Spark 4's replay
+     unions the adds of all valid batches (the v1 ``delete`` action is no
+     longer honored), so content — not actions — must carry the change.
+     The batch-id structure (which the reader derives ARITHMETICALLY from
      the compact interval, not by listing) is untouched, so a restarted
      query appends ``<latestBatch+1>`` exactly as before;
-  4. the multi-file swap is guarded by a write-ahead log
-     (``_spark_metadata/.manifest-compaction-wal``): stage every
-     rewritten log file, persist the WAL (rename list + obsolete data
-     files), then rename latest-first and delete the superseded part
-     files.  ``recover_manifest_compaction`` (run automatically at the
-     start of every compaction) replays an interrupted swap to
-     completion, so a crash at ANY point converges to the committed
-     state.  The operational contract is OPTIMIZE's: writer stopped and
-     readers quiesced during the maintenance window.
+  4. commits through compact.py's write-ahead swap, its WAL at
+     ``_spark_metadata/.manifest-compaction-wal``: the log renames, latest
+     first, then the deletes of the superseded part files.  Its
+     crash-state table holds row for row: a crash after the latest log's
+     rename shows some rows twice (the old adds of the earlier logs) and
+     never loses one, and the next run converges.
 
 Scale: the log replay and binning are driver-side over the file KEY SET
 (names+sizes, no data); each bin rewrite is a distributed read→write; at
-cloud scale the swap is one small-object PUT+rename, and the
-never-delete-before-commit ordering covers non-atomic object-store
-renames exactly like compact.py.
+cloud scale the swap is one small-object PUT+rename per log file.
 """
 
 from __future__ import annotations
 
 import json
 import posixpath
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from bifrost_spark.streaming import compact
 from bifrost_spark.streaming._sink import hadoop_fs
 
 _VERSION = "v1"
 _COMPACT_SUFFIX = ".compact"
-_STAGING_SUFFIX = ".compact-staging"
+_LOG_RE = re.compile(r"^\d+(\.compact)?$")
 _WAL_NAME = ".manifest-compaction-wal"
 
 
@@ -76,28 +71,6 @@ class ManifestCompactStats:
     bins_written: int = 0
     bytes_rewritten: int = 0
     garbage_removed: int = 0
-
-
-def _read_lines(fs, jvm, jpath) -> list[str]:
-    stream = fs.open(jpath)
-    try:
-        reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream))
-        lines = []
-        line = reader.readLine()
-        while line is not None:
-            lines.append(line)
-            line = reader.readLine()
-        return lines
-    finally:
-        stream.close()
-
-
-def _write_lines(fs, jvm, jpath, lines: list[str]) -> None:
-    out = fs.create(jpath, True)
-    try:
-        out.write(("\n".join(lines) + "\n").encode("utf-8"))
-    finally:
-        out.close()
 
 
 def _parse_generation(first_segment: str) -> tuple[int, str]:
@@ -116,22 +89,19 @@ def _parse_generation(first_segment: str) -> tuple[int, str]:
     return 1, rest
 
 
-def _log_batches(fs, jvm, meta_dir) -> list[tuple[int, bool, str]]:
+def _log_batches(fs, jvm, meta_dir: str) -> list[tuple[int, bool, str]]:
     """[(batch_id, is_compact, name)] ascending, ignoring temp/CRC files."""
     out = []
-    for st in fs.listStatus(meta_dir) or []:
+    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(meta_dir)) or []:
         name = st.getPath().getName()
-        if name.endswith(_COMPACT_SUFFIX):
-            stem = name[: -len(_COMPACT_SUFFIX)]
-            if stem.isdigit():
-                out.append((int(stem), True, name))
-        elif name.isdigit():
-            out.append((int(name), False, name))
+        m = _LOG_RE.match(name)
+        if m:
+            out.append((int(name.removesuffix(_COMPACT_SUFFIX)), bool(m.group(1)), name))
     out.sort()
     return out
 
 
-def _replay_log(fs, jvm, meta_dir) -> tuple[dict[str, dict], str, list[str]]:
+def _replay_log(fs, jvm, meta_dir: str) -> tuple[dict[str, dict], str, list[str]]:
     """(live file set {path -> SinkFileStatus}, latest log name, ALL valid
     log names).  Valid = latest compact + later deltas — exactly the files
     Spark 4's reader unions (it ignores the v1 ``delete`` action, so the
@@ -147,9 +117,7 @@ def _replay_log(fs, jvm, meta_dir) -> tuple[dict[str, dict], str, list[str]]:
         if bid < start_from or (bid == start_from and not is_compact and compacts):
             continue
         valid_names.append(name)
-        lines = _read_lines(
-            fs, jvm, jvm.org.apache.hadoop.fs.Path(meta_dir, name)
-        )
+        lines = compact._read_lines(fs, jvm, f"{meta_dir}/{name}")
         if not lines or lines[0] != _VERSION:
             raise ValueError(f"unexpected sink log version in {name}: {lines[:1]}")
         for line in lines[1:]:
@@ -161,32 +129,6 @@ def _replay_log(fs, jvm, meta_dir) -> tuple[dict[str, dict], str, list[str]]:
     return adds, batches[-1][2], valid_names
 
 
-def recover_manifest_compaction(fs, jvm, meta_dir) -> bool:
-    """Replay an interrupted swap from the WAL.  Idempotent: renames whose
-    staging file is gone already committed; data-file deletes are
-    re-issued (no-ops when already deleted).  Returns True if a WAL was
-    found and replayed."""
-    wal_path = jvm.org.apache.hadoop.fs.Path(meta_dir, _WAL_NAME)
-    if not fs.exists(wal_path):
-        return False
-    wal = json.loads(_read_lines(fs, jvm, wal_path)[0])
-    _apply_wal(fs, jvm, meta_dir, wal)
-    fs.delete(wal_path, False)
-    return True
-
-
-def _apply_wal(fs, jvm, meta_dir, wal: dict) -> None:
-    for staged_name, final_name in wal["renames"]:
-        staged = jvm.org.apache.hadoop.fs.Path(meta_dir, staged_name)
-        if not fs.exists(staged):
-            continue  # this rename already committed
-        final = jvm.org.apache.hadoop.fs.Path(meta_dir, final_name)
-        fs.delete(final, False)
-        fs.rename(staged, final)
-    for p in wal["delete"]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(p), False)
-
-
 def compact_manifest_sink(
     spark: SparkSession,
     path: str,
@@ -194,12 +136,14 @@ def compact_manifest_sink(
 ) -> ManifestCompactStats:
     """Compact a ``_spark_metadata`` parquet sink directory in place.
 
-    Run with the writing query stopped.  Readers are consistent at every
-    instant: the staged-log rename is the only commit point.
+    Run with the writing query stopped.  Readers never lose a row: the
+    latest log's rename is the commit point.
     """
     fs, jvm = hadoop_fs(spark, path), spark._jvm
-    meta_dir = jvm.org.apache.hadoop.fs.Path(path + "/_spark_metadata")
-    recover_manifest_compaction(fs, jvm, meta_dir)
+    meta_dir = path + "/_spark_metadata"
+    wal_path = f"{meta_dir}/{_WAL_NAME}"
+    compact._replay_wal(fs, jvm, wal_path)
+    compact._drop_staged(fs, jvm.org.apache.hadoop.fs.Path(meta_dir), _LOG_RE)
     live, latest_name, valid_names = _replay_log(fs, jvm, meta_dir)
     stats = ManifestCompactStats(files_before=len(live))
 
@@ -219,16 +163,7 @@ def compact_manifest_sink(
     to_delete: list[str] = []
     for d, files in sorted(by_dir.items()):
         files.sort(key=lambda s: posixpath.basename(s["path"]))
-        bins, cur, cur_bytes = [], [], 0
-        for st in files:
-            if cur and cur_bytes + st["size"] > target_bytes:
-                bins.append(cur)
-                cur, cur_bytes = [], 0
-            cur.append(st)
-            cur_bytes += st["size"]
-        if cur:
-            bins.append(cur)
-        for group in bins:
+        for group in compact._bins(files, [s["size"] for s in files], target_bytes):
             if len(group) < 2:
                 continue
             srcs = [s["path"] for s in group]
@@ -240,34 +175,15 @@ def compact_manifest_sink(
             out_gen = 1 + max(g for g, _ in gens)
             # a fresh name every generation: never the same as a live
             # listed file (this run's outputs included), so we never
-            # rename over or delete live data before the WAL commit
+            # write over live data before the WAL commit
             while (
                 f"{d}/compacted-g{out_gen}-{stem}.parquet" in new_live
                 or f"{d}/compacted-g{out_gen}-{stem}.parquet" in live
             ):
                 out_gen += 1
-            out_name = f"compacted-g{out_gen}-{stem}.parquet"
-            out_path = f"{d}/{out_name}"
+            out_path = f"{d}/compacted-g{out_gen}-{stem}.parquet"
             assert out_path not in live and out_path not in srcs
-            tmp_dir = f"{d}/.{out_name}.tmp"
-            (
-                spark.read.parquet(*srcs)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(tmp_dir)
-            )
-            # move the single part file out of the tmp dir to its final name
-            part = None
-            for fst in fs.listStatus(jvm.org.apache.hadoop.fs.Path(tmp_dir)):
-                if fst.getPath().getName().startswith("part-"):
-                    part = fst.getPath()
-            if part is None:
-                raise RuntimeError(f"no part file produced for {out_path}")
-            final = jvm.org.apache.hadoop.fs.Path(out_path)
-            fs.delete(final, False)  # idempotent re-run
-            fs.rename(part, final)
-            fs.delete(jvm.org.apache.hadoop.fs.Path(tmp_dir), True)
-            fstat = fs.getFileStatus(final)
+            fstat = compact._write_one_file(spark.read.parquet(*srcs), out_path)
             for s in group:
                 new_live.pop(s["path"], None)
             new_live[out_path] = {
@@ -285,30 +201,23 @@ def compact_manifest_sink(
 
     if stats.bins_written:
         # Stage the rewritten history: latest valid log := full new live
-        # set; every earlier valid log := empty batch.  Then WAL + swap.
+        # set; every earlier valid log := empty batch.  Then the swap.
         renames: list[tuple[str, str]] = []
         for name in valid_names:
-            staged_name = name + _STAGING_SUFFIX
+            final = f"{meta_dir}/{name}"
             if name == latest_name:
                 lines = [_VERSION] + [
                     json.dumps(new_live[p]) for p in sorted(new_live)
                 ]
             else:
                 lines = [_VERSION]
-            _write_lines(
-                fs, jvm, jvm.org.apache.hadoop.fs.Path(meta_dir, staged_name),
-                lines,
-            )
-            renames.append((staged_name, name))
+            compact._write_lines(fs, jvm, compact._staged(final), lines)
+            renames.append((compact._staged(final), final))
         # latest first: at no point does the view lose rows (a crash
         # mid-swap shows duplicates, resolved by WAL replay — and the
         # contract quiesces readers during the window anyway)
-        renames.sort(key=lambda r: r[1] != latest_name)
-        wal = {"renames": renames, "delete": sorted(to_delete)}
-        wal_path = jvm.org.apache.hadoop.fs.Path(meta_dir, _WAL_NAME)
-        _write_lines(fs, jvm, wal_path, [json.dumps(wal)])
-        _apply_wal(fs, jvm, meta_dir, wal)
-        fs.delete(wal_path, False)
+        renames.sort(key=lambda r: r[1] != f"{meta_dir}/{latest_name}")
+        compact._swap(fs, jvm, wal_path, renames, sorted(to_delete))
 
     stats.files_after = len(new_live)
     return stats

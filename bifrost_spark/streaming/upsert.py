@@ -16,8 +16,9 @@ idempotent delta layout:
 * readers resolve current state with one window: latest (ts, batch_id)
   per key across all deltas;
 * ``compact_state`` folds all deltas into a single base delta (an
-  OPTIMIZE for the state view) using the same crash-safe
-  write-then-swap discipline as streaming/compact.py.
+  OPTIMIZE for the state view) and commits it through the write-ahead
+  swap of streaming/compact.py, the one crash protocol of every
+  compaction job.
 
 Scale: each batch shuffles only that batch's rows (by key, for the
 per-batch dedup); state resolution shuffles |state| once at READ time —
@@ -29,11 +30,14 @@ one row per key.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from bifrost_spark.streaming import compact
 from bifrost_spark.streaming._sink import hadoop_fs
 
 
@@ -98,7 +102,7 @@ def read_state(spark: SparkSession, path: str, key_cols: list[str],
     return _latest_per_key(df, key_cols, order).drop("batch_id")
 
 
-_STAGING_NAME = ".base-staging"
+_DELTA_RE = re.compile(r"^batch_id=-?\d+$")
 
 
 def compact_state(spark: SparkSession, path: str, key_cols: list[str],
@@ -107,36 +111,35 @@ def compact_state(spark: SparkSession, path: str, key_cols: list[str],
 
     The new base gets batch_id = (min existing batch_id) - 1 — a FRESH
     directory that sorts below every real batch, so repeated compactions
-    step -1, -2, ... and never rename over a live delta.  The swap is one
-    rename: the base is fully written to a dot-prefixed staging dir
-    (invisible to readers), renamed into place, and only THEN are the
-    superseded deltas deleted.  A crash before the rename leaves the old
-    layout intact (stale staging is overwritten by the next run); a crash
-    mid-delete leaves the new base plus some superseded deltas, which
-    read_state resolves to the identical view (every superseded row is
-    also in the base with equal order keys and content).  All paths go
-    through the Hadoop FileSystem API so the same code works on object
-    stores (s3a/abfss), matching the rest of the streaming layer."""
+    step -1, -2, ... and never rename over a live delta.  The base is
+    fully written under its staged name ``.batch_id=<id>`` (invisible to
+    readers) and committed by compact.py's write-ahead swap: the one
+    rename into place, then the deletes of the superseded deltas, with
+    the WAL at ``{path}/.compaction-wal``.  Per that module's crash-state
+    table, a crash before the WAL leaves the old layout (the next run
+    drops the staged base), and a crash after it leaves the new base
+    beside some superseded deltas, which read_state resolves to the
+    identical view (every superseded row is also in the base with equal
+    order keys and content) until the next run replays the WAL.  All
+    paths go through the Hadoop FileSystem API so the same code works on
+    object stores (s3a/abfss), matching the rest of the streaming layer."""
     jvm = spark._jvm
-    delta_root = jvm.org.apache.hadoop.fs.Path(f"{path}/delta")
-    fs = hadoop_fs(spark, f"{path}/delta")
+    fs = hadoop_fs(spark, path)
+    delta_root = f"{path}/delta"
+    wal_path = f"{path}/{compact._WAL_NAME}"
+    compact._replay_wal(fs, jvm, wal_path)
+    compact._drop_staged(fs, jvm.org.apache.hadoop.fs.Path(delta_root), _DELTA_RE)
 
     superseded, min_id = [], 0
-    for st in fs.listStatus(delta_root) or []:
+    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(delta_root)) or []:
         name = st.getPath().getName()
-        if name.startswith("batch_id="):
-            superseded.append(name)
+        if _DELTA_RE.match(name):
+            superseded.append(f"{delta_root}/{name}")
             min_id = min(min_id, int(name.split("=", 1)[1]))
 
     state = read_state(spark, path, key_cols, ts_col, tiebreak_cols)
     n = state.count()
-    staging = f"{path}/delta/{_STAGING_NAME}"
-    state.write.mode("overwrite").parquet(staging)
-    # commit point: one rename makes the new base visible
-    fs.rename(
-        jvm.org.apache.hadoop.fs.Path(staging),
-        jvm.org.apache.hadoop.fs.Path(f"{path}/delta/batch_id={min_id - 1}"),
-    )
-    for name in superseded:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/delta/{name}"), True)
+    base = f"{delta_root}/batch_id={min_id - 1}"
+    state.write.mode("overwrite").parquet(compact._staged(base))
+    compact._swap(fs, jvm, wal_path, [(compact._staged(base), base)], superseded)
     return n

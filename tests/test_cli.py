@@ -170,8 +170,9 @@ def test_cli_baldr_sink_format(staged_input, tmp_path):
 
 def test_cli_compact_manifest_subcommand(spark, tmp_path, capsys):
     """End-to-end maintenance path: archive via the daemon's default sink,
-    then `compact --layout manifest` folds the small files and prints one
-    JSON stats line; the archive reads back identically."""
+    then `compact` (which finds the `_spark_metadata` log itself) folds the
+    small files and prints one JSON stats line; the archive reads back
+    identically."""
     import glob as _glob
     import json as _json
 
@@ -197,7 +198,7 @@ def test_cli_compact_manifest_subcommand(spark, tmp_path, capsys):
     q.stop()
     before = {tuple(r) for r in spark.read.parquet(str(out)).collect()}
 
-    rc = cli_main(["compact", "--path", str(out), "--layout", "manifest"])
+    rc = cli_main(["compact", "--path", str(out)])
     assert rc == 0
     stats = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stats["bins_written"] >= 1

@@ -489,7 +489,7 @@ def test_baldr_archive_roundtrip_on_generated_messages(
         pd.DataFrame(rows, columns=["topic", "partition", "offset", "value"]),
         schema="topic string, partition int, offset long, value binary",
     )
-    manifest = write_baldr_archive(df, root).collect()
+    manifest = write_baldr_archive(df, root)
     assert sum(r.n_records for r in manifest) == len(rows)
     if not rows:
         return  # nothing written; reader has no objects to list

@@ -190,25 +190,23 @@ def test_crash_mid_swap_recovers(spark, manifest_sink, monkeypatch):
     """Kill the swap after the FIRST rename (latest log already carries the
     new live set, earlier logs still hold the old adds, WAL on disk) — the
     next compaction run must replay the WAL to the committed state."""
-    import bifrost_spark.streaming.manifest_compact as mc
+    import bifrost_spark.streaming.compact as core
 
     _in, out, _rerun = manifest_sink
     before = _rows(spark, out)
 
-    real_apply = mc._apply_wal
+    real_apply = core._apply_wal
 
-    def crashing_apply(fs, jvm, meta_dir, wal):
-        staged_name, final_name = wal["renames"][0]
-        staged = jvm.org.apache.hadoop.fs.Path(meta_dir, staged_name)
-        final = jvm.org.apache.hadoop.fs.Path(meta_dir, final_name)
+    def crashing_apply(fs, jvm, wal):
+        staged, final = (jvm.org.apache.hadoop.fs.Path(p) for p in wal["renames"][0])
         fs.delete(final, False)
         fs.rename(staged, final)
         raise RuntimeError("simulated crash mid-swap")
 
-    monkeypatch.setattr(mc, "_apply_wal", crashing_apply)
+    monkeypatch.setattr(core, "_apply_wal", crashing_apply)
     with pytest.raises(RuntimeError, match="simulated crash"):
         compact_manifest_sink(spark, out)
-    monkeypatch.setattr(mc, "_apply_wal", real_apply)
+    monkeypatch.setattr(core, "_apply_wal", real_apply)
 
     assert glob.glob(f"{out}/_spark_metadata/.manifest-compaction-wal")
     # recovery runs automatically at the start of the next compaction

@@ -1,13 +1,15 @@
 """One spelling per device, checked on the parsed source (no Spark): the
 replay-idempotent batch_id sink protocol and the Hadoop FileSystem
-lookup live only in ``bifrost_spark/streaming/_sink.py``.  Outside it,
-no module may
+lookup live only in ``bifrost_spark/streaming/_sink.py``, and FileSystem
+renames only in the compaction core ``bifrost_spark/streaming/compact.py``.
+Outside them, no module may
 
 * call ``getFileSystem`` (use ``_sink.hadoop_fs``);
 * call ``write_batch_partition`` or ``output_exists`` (use
   ``_sink.start_batch_sink`` / ``_sink.prior_partitions``);
 * hand ``foreachBatch`` a callback that writes a batch_id-partitioned
-  sink itself (directly or through a function of the same module).
+  sink itself (directly or through a function of the same module);
+* call ``.rename(`` (commit staged output through ``compact._swap``).
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "bifrost_spark"
 SINK = PKG / "streaming" / "_sink.py"
+CORE = PKG / "streaming" / "compact.py"
 SINK_CALLS = {"write_batch_partition", "output_exists"}
 
 
@@ -58,7 +61,11 @@ def test_sink_and_hadoop_fs_have_one_spelling():
         where = path.relative_to(PKG)
         for call in _calls(tree):
             name = _name(call)
-            if name == "getFileSystem" or name in SINK_CALLS:
+            if (
+                name == "getFileSystem"
+                or name in SINK_CALLS
+                or (name == "rename" and isinstance(call.func, ast.Attribute) and path != CORE)
+            ):
                 offenders.append(f"{where}:{call.lineno} calls {name}")
             elif name == "foreachBatch" and call.args:
                 cb = call.args[0]

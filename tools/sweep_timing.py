@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Full-surface timing sweep: time EVERY registered query at a given SF
 (default sf0.1) with the same noop-sink protocol as bench.py, and print a
-sorted JSON report.  The headline bench (bench.py) tracks 51 curated
-shapes per-round; this sweep is the audit tool that finds slow outliers
-in the other ~150 registered queries before they matter at scale.
+sorted JSON report.  The headline bench (bench.py) tracks 82 curated
+shapes (``HEADLINE``) per round; this sweep is the audit tool that finds
+slow outliers in the other registered queries before they matter at scale.
 
 Usage: python tools/sweep_timing.py [--sf-dir DIR] [--runs N] [--only a,b]
                                     [--plans DIR]
@@ -41,9 +41,13 @@ def main() -> None:
     qs = registry.queries()
     names = [n for n in args.only.split(",") if n] or list(qs)
 
-    # Warm JVM codegen + Arrow worker paths once (same as bench.py).
-    qs["q_agg_hash"](spark, "/root/testdata/sf0.001").count()
-    qs["q_dedup_embedding"](spark, "/root/testdata/sf0.001").count()
+    # Warm JVM codegen + Arrow worker paths once, on the sf0.001 tables
+    # beside --sf-dir, through the noop sink the timed region uses (same
+    # as bench.py), so the first timed id does not pay for loading the
+    # noop writer's classes.
+    warm_dir = os.path.join(os.path.dirname(os.path.abspath(args.sf_dir)), "sf0.001")
+    for warm in ("q_agg_hash", "q_dedup_embedding"):
+        qs[warm](spark, warm_dir).write.format("noop").mode("overwrite").save()
 
     # build = query-construction wall (plan assembly + any driver-side
     # fits/collects, e.g. k-means training or eager checkpoints) — costs
