@@ -2,21 +2,20 @@
 """Benchmark runner (driver contract): run the headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line:
-``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``.
+``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+"per_id": {...}}``.
 
-Timing is end-to-end per query: plan build + execution, consumed through
-the noop sink (guide §1.4) so every column of every row materializes
-without a driver collect.
+A query's time is its plan build plus its execution, consumed through the
+noop sink (guide §1.4) so every column of every row materializes without a
+driver collect.  The faster of two runs counts, so the number tracks the
+operator rather than one-time plan compilation or Python-runner start.
+``per_id`` splits that one run: ``build_s`` (the query function, with any
+Spark job it runs while building) and ``exec_s`` (the noop write), the
+jobs each part ran (``jobs_build``, ``jobs_exec``), and the run's
+``shuffle_write_bytes`` and ``spill_bytes``.
 
-r12 measurement fix (per the r11 verdict): the clock now starts BEFORE the
-query constructor runs, so driver-side build work — eager localCheckpoints,
-sample collects, k-means/OPQ fits — is inside the timed region, matching
-this docstring's long-standing "plan build + execution" promise.  Through
-r11 the clock started after the constructor returned, which hid roughly
-half the engine's real cost (SWEEP_r11: 87.4 s build vs 76.7 s exec across
-all 273 ids).  Expect r12 numbers to be HIGHER than r11's for build-heavy
-ids — the clock got honest, the engine got faster (old-protocol numbers
-are preserved in OPTIMIZATION_r12.md for continuity).
+``warm`` and ``time_ids`` are the repo's one warm-up-then-time loop:
+``tools/sweep_timing.py`` and ``tools/scale_audit.py`` call them too.
 """
 
 from __future__ import annotations
@@ -30,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bifrost_spark import registry
 from bifrost_spark.session import get_spark
+from perfbench.tracing import JobCounter, Tracer
 
 # Headline set: the flagship aggregate, a big join, windows, sort/limit,
 # dedup + similarity representatives — the operators whose plans matter at
@@ -141,53 +141,79 @@ HEADLINE = [
 ]
 
 
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def warm(spark) -> None:
+    """Warm the JVM codegen path and the Arrow/Python-worker path once on
+    the smallest fixture, through the noop sink the timed region uses, so
+    the first timed id pays for no class loading or worker spin-up
+    (workers are reused: spark.python.worker.reuse)."""
+    qs = registry.queries()
+    for name in ("q_agg_hash", "q_dedup_embedding"):
+        _noop(qs[name](spark, "/root/testdata/sf0.001"))
+
+
+def time_ids(spark, ids, sf_dir: str, runs: int) -> dict[str, dict]:
+    """Run each id ``runs`` times and keep the run with the smallest build
+    + exec, so both parts come from one run that happened.  Run r's jobs
+    are in job groups ``<id>:<r>:build`` and ``<id>:<r>:exec``; the kept
+    run's are read back from Spark's status store after the clock stops.
+    Returns per id ``build_s``, ``exec_s``, ``jobs_build``, ``jobs_exec``,
+    ``shuffle_write_bytes`` and ``spill_bytes``."""
+    qs = registry.queries()
+    jobs = JobCounter(spark, Tracer())
+    out: dict[str, dict] = {}
+    for name in ids:
+        timings = []
+        for run in range(runs):
+            jobs.set_group(f"{name}:{run}:build")
+            t0 = time.perf_counter()
+            df = qs[name](spark, sf_dir)
+            build = time.perf_counter() - t0
+            jobs.set_group(f"{name}:{run}:exec")
+            t0 = time.perf_counter()
+            _noop(df)
+            exe = time.perf_counter() - t0
+            timings.append((build + exe, build, exe, run))
+        jobs.set_group(None)
+        jobs.drain_events()
+        _, build, exe, run = min(timings)
+        b, x = (jobs.group_stats(f"{name}:{run}:{part}") for part in ("build", "exec"))
+        out[name] = {
+            "build_s": round(build, 3),
+            "exec_s": round(exe, 3),
+            "jobs_build": b["jobs"],
+            "jobs_exec": x["jobs"],
+            "shuffle_write_bytes": b["shuffle_write_bytes"] + x["shuffle_write_bytes"],
+            "spill_bytes": b["spill_bytes"] + x["spill_bytes"],
+        }
+        print(f"{build:8.3f}b {exe:8.3f}x  {name}", file=sys.stderr, flush=True)
+    return out
+
+
+def report(timed: dict[str, dict], sf_dir: str) -> dict:
+    """The driver's JSON: ``value`` is the sum of ``queries``, each id's
+    ``build_s + exec_s``; ``per_id`` is ``time_ids``'s split."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    queries = {n: round(t["build_s"] + t["exec_s"], 3) for n, t in timed.items()}
+    return {
+        "metric": "headline_queries_total_time",
+        "value": round(sum(queries.values()), 3),
+        "unit": "sec",
+        "queries": queries,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "per_id": timed,
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bifrost-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = registry.queries()
-
-    # Warm the JVM/codegen path AND the Arrow/Python-worker path once on the
-    # smallest SF so per-query numbers measure the operator, not first-query
-    # JIT or worker spin-up (workers are reused: spark.python.worker.reuse).
-    # r11: warm through the SAME noop sink the timed region uses (guide
-    # §1.4) so the first timed query doesn't pay one-time noop-writer
-    # class-loading; the timed methodology below is unchanged.
-    qs["q_agg_hash"](spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    qs["q_dedup_embedding"](spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    # Two runs per query, report the min: the warm run measures operator
-    # throughput (what scales with data volume) rather than one-time plan
-    # compilation / Python-runner initialization, which are per-stage
-    # constants independent of scale factor.
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()  # r12: clock starts BEFORE build
-            df = qs[name](spark, sf_dir)
-            # noop action: materializes every row without driver collect
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-
-    total = round(sum(timings.values()), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_time",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            }
-        )
-    )
+    warm(spark)
+    print(json.dumps(report(time_ids(spark, HEADLINE, sf_dir, runs=2), sf_dir)))
     spark.stop()
 
 

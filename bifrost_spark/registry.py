@@ -53,16 +53,8 @@ REGISTRY: dict[str, QuerySpec] = {}
 # ROUND-10 WINDOW (VERDICT r9 item 1): the 9 deferred round-4 ids
 # FIRST, then all 14 new round-10 ids, then the 27 stalest round-5 rows
 # (CORRECTNESS_r05 order) to fill 50.
-# ROUND-11 WINDOW PLAN: the 23 remaining round-5 ids (q_join_full and
-# q_join_asof rotated back to the backlog front, then in CORRECTNESS_r05
-# order: q_join_range, q_pivot, q_grouping_sets, q_explode_tokens,
-# q_agg_stats, q_window_range_frame, q_window_lead_lag, q_ntile,
-# q_median, q_composite_report, q_subquery_scalar, q_udf_pandas,
-# q_histogram, q_json_schema, q_corr, q_dedup_keep_best,
-# q_subquery_exists, q_subquery_not_in, q_unpivot,
-# q_window_distribution, q_cond_agg)
-# FIRST, then every new round-11 id, then the stalest round-6 rows to
-# fill 50.
+# The round-10 window is the current one: CHECK_PRIORITY below holds it, and
+# tests/test_registry_window.py pins it.
 CHECK_PRIORITY: tuple[str, ...] = (
     # 9 round-4 ids deferred from the round-9 window (the pre-written plan)
     "q_zscore",
@@ -92,8 +84,8 @@ CHECK_PRIORITY: tuple[str, ...] = (
     "q_rmst",
     "q_cochran_armitage",
     # stalest round-5 standing rows (CORRECTNESS_r05 order) to fill 50;
-    # the remaining 21 round-5 ids (q_pivot .. q_cond_agg cohort) are the
-    # ROUND-11 backlog, then the round-6 cohort
+    # the remaining 21 round-5 ids (q_pivot .. q_cond_agg cohort), then
+    # the round-6 cohort, are the backlog for the next window
     "q_ks_drift",
     "q_psi_drift",
     "q_attribution",

@@ -20,7 +20,8 @@ Distribution shape:
     <first-offset %010d>.baldr.gz` (the reference's object key, s3.clj:
     15-20), so an object appears whole or not at all.  Payload bytes never
     pass through the driver; each file is written by exactly one task.
-    Paths are plain `open()`: local or mounted paths.
+    Paths are plain `open()`: local or mounted paths; a root with a URI
+    scheme is refused.
   * READER — Spark's `binaryFile` source lists and reads whole files in
     parallel (one row per file), and an Arrow-batched `mapInPandas`
     gunzips + unframes each file, reconstructing (topic, partition,
@@ -104,8 +105,9 @@ def _baldr_object(run: pa.Table, key: str) -> bytes:
 def write_baldr_archive(
     df: DataFrame, root: str, group_id: str = "bifrost-group"
 ) -> list[Row]:
-    """Write a message-shaped DataFrame (topic, partition, offset, value)
-    as offset-named ``.baldr.gz`` objects; returns the collected manifest
+    """Write a message-shaped DataFrame (topic, partition, offset, value;
+    other columns are not written) as offset-named ``.baldr.gz`` objects;
+    returns the collected manifest
     rows (topic, partition, first_offset, n_records, path), one per
     object, as ``archive.write_offset_named`` does.
 
@@ -114,13 +116,7 @@ def write_baldr_archive(
     the reference's consumer FSM.  A null payload or an offset gap raises
     ``ValueError`` before the task opens any file.
     """
-    return archive.write_offset_named(
-        df.select("topic", "partition", "offset", "value"),
-        root,
-        group_id,
-        "baldr.gz",
-        _baldr_object,
-    )
+    return archive.write_offset_named(df, root, group_id, "baldr.gz", _baldr_object)
 
 
 def read_baldr_archive(spark: SparkSession, root: str, group_id: str = "bifrost-group") -> DataFrame:

@@ -23,12 +23,15 @@ Storage: the manifest file sink (``start_archive``) writes any Hadoop
 path, object stores included (``cloud.py`` configures the connector).
 The two offset-named writers (``start_offset_named_archive``,
 ``start_baldr_archive``) write each object from inside its Spark task
-with plain file calls, so their root is a local or mounted path.
+with plain file calls, so their root is a local or mounted path; they
+refuse a root with a URI scheme (``s3a://``, ``abfss://``, ``file://``)
+before the stream starts.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import uuid
 from dataclasses import dataclass, field
 
@@ -195,6 +198,18 @@ def start_archive(spark: SparkSession, cfg: ArchiveConfig) -> StreamingQuery:
     )
 
 
+def _check_local_root(root: str) -> None:
+    """Raise ``ValueError`` for a root with a URI scheme: the offset-named
+    writers join paths and write with plain file calls, so ``s3a://b/a``
+    would become the local directory ``s3a:/b/a`` while the stream still
+    committed the batch's offsets."""
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", root):
+        raise ValueError(
+            f"offset-named writers write local or mounted paths only, not {root!r}"
+            " (object stores: start_archive)"
+        )
+
+
 def write_offset_named(df: DataFrame, root: str, group_id: str, suffix: str, encode) -> list[Row]:
     """Write each (topic, partition) run of a message frame as ONE object
     ``<root>/<group_id>/<topic>/partition=<p>/<first offset %010d>.<suffix>``
@@ -210,8 +225,10 @@ def write_offset_named(df: DataFrame, root: str, group_id: str, suffix: str, enc
     it into place, so an object appears whole or not at all (the
     reference uploads a finished temp file, kafka.clj:71-72).  A replayed
     batch has the same first offsets, so it overwrites the same keys.
-    Payload bytes never pass through the driver.
+    Payload bytes never pass through the driver.  A root with a URI
+    scheme raises ``ValueError`` before any job runs.
     """
+    _check_local_root(root)
 
     def write_task(batches):
         chunks = [b for b in batches if b.num_rows]
@@ -271,7 +288,10 @@ def _parquet_object(run: pa.Table, key: str) -> bytes:
 
 def _start_batch_writer(spark: SparkSession, cfg: ArchiveConfig, write) -> StreamingQuery:
     """The offset-named writers' stream: one ``write(batch)`` per rotation;
-    the checkpoint commits the batch's offsets only after it returns."""
+    the checkpoint commits the batch's offsets only after it returns.  A
+    root with a URI scheme raises ``ValueError`` before the source is
+    read."""
+    _check_local_root(cfg.output_path)
     return (
         apply_topic_filter(build_source(spark, cfg), cfg)
         .writeStream.foreachBatch(lambda batch, _epoch: write(batch))

@@ -204,3 +204,36 @@ def test_cli_compact_manifest_subcommand(spark, tmp_path, capsys):
     assert stats["bins_written"] >= 1
     assert {tuple(r) for r in spark.read.parquet(str(out)).collect()} == before
     assert not _glob.glob(f"{out}/part-*.parquet")
+
+
+def test_baldr_refuses_object_store_root_before_the_stream_starts(spark, tmp_path):
+    """The baldr writer writes with plain file calls: an ``s3a://`` root
+    from the CLI config must fail before the stream reads a batch, not be
+    written to a local ``s3a:`` directory while the offsets commit."""
+    from bifrost_spark.main import load_config
+    from bifrost_spark.sources.baldr import write_baldr_archive
+    from bifrost_spark.streaming.archive import start_baldr_archive
+
+    cfg_path = tmp_path / "archive.json"
+    cfg_path.write_text(json.dumps({
+        "output_path": "s3a://bucket/archive",
+        "checkpoint_path": str(tmp_path / "ckpt"),
+        "source": "file",
+        "input_path": str(tmp_path),
+        "sink_format": "baldr",
+    }))
+    cwd = spark._jvm.java.lang.System.getProperty("user.dir")
+    before = {q.id for q in spark.streams.active}
+    try:
+        with pytest.raises(ValueError, match="s3a://bucket/archive"):
+            start_baldr_archive(spark, load_config(str(cfg_path)))
+        assert {q.id for q in spark.streams.active} == before
+        # the writer itself refuses the root before it runs a job
+        with pytest.raises(ValueError, match="s3a://bucket/archive"):
+            write_baldr_archive(spark.range(0), "s3a://bucket/archive")
+    finally:
+        for q in spark.streams.active:
+            if q.id not in before:
+                q.stop()
+    assert not os.path.exists(os.path.join(cwd, "s3a:"))
+    assert not os.path.exists("s3a:")

@@ -10,6 +10,11 @@ Outside them, no module may
 * hand ``foreachBatch`` a callback that writes a batch_id-partitioned
   sink itself (directly or through a function of the same module);
 * call ``.rename(`` (commit staged output through ``compact._swap``).
+
+The timing loop has one spelling too: ``bench.py``'s ``warm`` and
+``time_ids``.  No module under ``bifrost_spark/`` or ``tools/`` may write
+to the ``noop`` sink; the sweep and the scale audit time ids by calling
+bench's loop.
 """
 
 from __future__ import annotations
@@ -17,7 +22,8 @@ from __future__ import annotations
 import ast
 import pathlib
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "bifrost_spark"
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PKG = ROOT / "bifrost_spark"
 SINK = PKG / "streaming" / "_sink.py"
 CORE = PKG / "streaming" / "compact.py"
 SINK_CALLS = {"write_batch_partition", "output_exists"}
@@ -74,4 +80,14 @@ def test_sink_and_hadoop_fs_have_one_spelling():
                     offenders.append(
                         f"{where}:{call.lineno} foreachBatch writes a batch_id sink"
                     )
+    assert offenders == []
+
+
+def test_timing_loop_has_one_spelling():
+    offenders = []
+    for path in sorted([*PKG.rglob("*.py"), *(ROOT / "tools").rglob("*.py")]):
+        for call in _calls(ast.parse(path.read_text(), str(path))):
+            values = [*call.args, *(k.value for k in call.keywords)]
+            if any(isinstance(v, ast.Constant) and v.value == "noop" for v in values):
+                offenders.append(f"{path.relative_to(ROOT)}:{call.lineno} writes to the noop sink")
     assert offenders == []

@@ -4,8 +4,8 @@
 Synthesizes 2× and 5× clones of the sf0.1 fixture in /tmp/scale/x{1,2,5}
 (documents/events grow by key-shifted, token-perturbed unions; the other
 tables are copied unscaled) and times the heaviest queries at each size
-with the noop sink (min of N).  The read-only /root/testdata is never
-touched.
+through bench.py's ``warm`` and ``time_ids`` loop (fastest of N runs).
+The read-only /root/testdata is never touched.
 
 Clone discipline:
 * doc_id/event_id/user_id shift by size·i so keys stay unique;
@@ -26,7 +26,6 @@ import argparse
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -97,30 +96,17 @@ def main() -> None:
     args = ap.parse_args()
     synthesize(args.out)
 
-    from bifrost_spark import registry
+    from bench import time_ids, warm
     from bifrost_spark.session import get_spark
 
     spark = get_spark("bifrost-scale-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = registry.queries()
-    qs["q_agg_hash"](spark, "/root/testdata/sf0.001").count()
-    qs["q_dedup_embedding"](spark, "/root/testdata/sf0.001").count()
-
-    results: dict[str, dict[int, float]] = {}
-    for name in QUERIES:
-        results[name] = {}
-        for k in FACTORS:
-            sf_dir = os.path.join(args.out, f"x{k}")
-            best = float("inf")
-            for _ in range(args.runs):
-                spark.sparkContext.setJobDescription(f"scale:{name}:x{k}")
-                t0 = time.perf_counter()
-                df = qs[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-                spark.sparkContext.setJobDescription(None)
-            results[name][k] = round(best, 3)
-            print(f"{name} x{k}: {best:.3f}", flush=True)
+    warm(spark)
+    results: dict[str, dict[int, float]] = {name: {} for name in QUERIES}
+    for k in FACTORS:
+        timed = time_ids(spark, QUERIES, os.path.join(args.out, f"x{k}"), args.runs)
+        for name, t in timed.items():
+            results[name][k] = round(t["build_s"] + t["exec_s"], 3)
 
     print(f"\n{'query':26s}" + "".join(f"{'x' + str(k):>9s}" for k in FACTORS)
           + "   x5/x1")

@@ -2,11 +2,12 @@
 """Diff two full-surface sweep artifacts (tools/sweep_timing.py output).
 
 Prints per-query exec/build deltas above a threshold, plus totals and
-add/drop lists — the per-round regression triage for the ~160 registered
-queries the headline bench never times.  Remember the harness-shape
-caveat (MEMORY / ROADMAP round-3 root cause): cross-round wall-times
-drift environmentally, so read RELATIVE outliers against the run's
-median drift, not absolute seconds.
+add/drop lists: the per-round regression triage for the registered
+queries the headline bench never times.  Wall times drift between runs on
+a shared host, so read RELATIVE outliers against the run's median drift,
+not absolute seconds.  The sweep keys it reads, ``sf_dir``, ``total``,
+``total_build``, ``queries`` and ``builds``, are unchanged by the sweep's
+move onto bench.py's loop, so older sweep artifacts still diff.
 
 Usage: python tools/sweep_diff.py OLD.json NEW.json [--min-delta 0.3]
 """
