@@ -5,7 +5,7 @@ Users of the sink: drift_monitor, centroid_drift, sketch_drift and
 fuzzy_dedup (stateless per batch), and sprt_monitor, cusum_monitor,
 page_hinkley and gst_monitor (state carried in their own output).
 Users of ``hadoop_fs``: compact, manifest_compact, upsert, the CLI's
-``compact`` subcommand (main.py) and ``output_exists`` below.
+``compact`` subcommand (main.py) and ``newest_prior_partition`` below.
 
 Replay contract (the replayable-source plus idempotent-sink recipe of
 Structured Streaming, SIGMOD 2018; the reference's "same first offset →
@@ -16,12 +16,16 @@ same key" upload, s3.clj:15-20):
   checkpoint commit re-runs the batch into the same directory instead of
   appending a duplicate (exactly-once at the sink, no reader-side dedup);
 * a monitor that carries state in its output reads ONLY partitions with
-  ``batch_id < N`` (``prior_partitions``), so a re-run of batch N never
-  reads its own half-written output and recomputes the same rows;
+  ``batch_id < N``, so a re-run of batch N never reads its own
+  half-written output and recomputes the same rows.  It reads exactly
+  one: the newest, ``batch_id = max k < N`` (``newest_prior_partition``).
+  With the ordering rule below, every emitted row carries the cumulative
+  state through its day, so that partition holds the whole state, however
+  many batches came before it;
 * a missing output path is the first batch and the only read failure
   that may reset a walk to its zero state; any other read error (FS
-  fault, corrupt file) propagates so the micro-batch fails and retries
-  instead of silently restarting the walk;
+  fault, corrupt file, a non-partition entry) propagates so the
+  micro-batch fails and retries instead of silently restarting the walk;
 * batches arrive in strictly increasing day order; a batch reaching back
   to an already-emitted day is a backfill correction and is rejected
   (``guard_order``) rather than corrupting the walk.
@@ -86,38 +90,34 @@ def write_batch_partition(df: DataFrame, batch_id: int, output_path: str) -> Non
                 spark.conf.set(_MODE_KEY, prev)
 
 
-def output_exists(spark, output_path: str) -> bool:
-    """Existence probe for a monitor's own output directory.
+def newest_prior_partition(spark, output_path: str, batch_id: int) -> DataFrame | None:
+    """The monitor's newest partition below the current batch,
+    ``output_path/batch_id=k`` for the largest k < N, read alone (with
+    ``basePath``, so its rows keep the ``batch_id`` column).  None when
+    the path is missing (the first batch) or holds no partition below N.
 
-    Classic sessions ask the Hadoop FileSystem directly.  On Spark Connect
-    sessions ``_jvm`` is unavailable, so the fallback is a schema-only
-    ``spark.read.parquet`` probe that treats ONLY the PATH_NOT_FOUND
-    AnalysisException as "missing" and re-raises everything else — same
-    reset-vs-retry contract, no JVM internals (ADVICE r9).
-    """
-    jvm = getattr(spark, "_jvm", None)
-    if jvm is not None:
-        path = jvm.org.apache.hadoop.fs.Path(output_path)
-        return bool(hadoop_fs(spark, output_path).exists(path))
-    from pyspark.errors import AnalysisException
-
-    try:
-        spark.read.parquet(output_path).schema
-        return True
-    except AnalysisException as exc:
-        if getattr(exc, "getErrorClass", lambda: None)() == "PATH_NOT_FOUND" or (
-            "PATH_NOT_FOUND" in str(exc)
-        ):
-            return False
-        raise
-
-
-def prior_partitions(spark, output_path: str, batch_id: int) -> DataFrame | None:
-    """The monitor's output rows with ``batch_id`` strictly below the
-    current batch, or None before the first batch has written anything."""
-    if not output_exists(spark, output_path):
+    The path is listed once.  Hidden entries (``_``/``.``, Spark's rule:
+    ``_SUCCESS``, ``.spark-staging-*``) are skipped; any other entry
+    raises, and so does an unreadable newest partition."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(output_path)
+    fs = hadoop_fs(spark, output_path)
+    if not fs.exists(root):
         return None
-    return spark.read.parquet(output_path).filter(F.col("batch_id") < batch_id)
+    below = []
+    for status in fs.listStatus(root):
+        name = status.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue
+        key, _, k = name.partition("=")
+        if key != "batch_id" or not k.isdigit():
+            raise ValueError(f"{output_path}: {name!r} is not a batch_id partition")
+        if int(k) < batch_id:
+            below.append(int(k))
+    if not below:
+        return None
+    return spark.read.option("basePath", output_path).parquet(
+        f"{output_path}/batch_id={max(below)}"
+    )
 
 
 def guard_order(

@@ -11,10 +11,11 @@ need day t−1's.  Instead of a state store, the state lives in the
 monitor's OWN OUTPUT: each emit writes per-day rows carrying BOTH the
 9-dp rounded readouts (day_mean, s_pos, s_neg, alarms — the
 q_cusum_drift output contract) and the RAW doubles sp_exact / sn_exact;
-the next batch recovers its offsets from the max-day row of the prior
-partitions.  Raw doubles round-trip parquet losslessly, so the continued
-walk is BIT-IDENTICAL to a single-shot walk — which is what the
-multi-batch differential gate asserts with set equality, not tolerance.
+the next batch recovers its offsets from the max-day row of the newest
+prior partition.  Raw doubles round-trip parquet losslessly, so the
+continued walk is BIT-IDENTICAL to a single-shot walk — which is what
+the multi-batch differential gate asserts with set equality, not
+tolerance.
 Replay, first-batch and ordering rules (each micro-batch carries whole
 days, later than the last emitted one) are the shared sink's
 (streaming/_sink.py).
@@ -45,7 +46,7 @@ from bifrost_spark.queries.monitor_ops import (
 )
 from bifrost_spark.streaming._sink import (
     guard_order,
-    prior_partitions,
+    newest_prior_partition,
     start_batch_sink,
 )
 
@@ -86,9 +87,10 @@ def batch_cusum_update(
 def _prior_state(
     spark, output_path: str, batch_id: int
 ) -> tuple[float, float, object]:
-    """(sp, sn, max_day) from the max-day row of the prior partitions
-    (``_sink.prior_partitions``); (0, 0, None) before the first batch."""
-    prior = prior_partitions(spark, output_path, batch_id)
+    """(sp, sn, max_day) from the max-day row of the newest prior
+    partition (``_sink.newest_prior_partition``); (0, 0, None) before
+    the first batch."""
+    prior = newest_prior_partition(spark, output_path, batch_id)
     row = [] if prior is None else prior.orderBy(F.desc("day")).limit(1).collect()
     if not row:
         return 0.0, 0.0, None

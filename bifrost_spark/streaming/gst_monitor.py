@@ -5,18 +5,19 @@ the per-look counts already emitted — the always-on deployment of
 batch↔streaming pairing (centroid_drift, sketch_drift, sprt_monitor,
 cusum_monitor, page_hinkley, and now the scheduled-looks design).
 
-State device (output-carried, INTEGER increments — the sprt_monitor end
+State device (output-carried, INTEGER counts — the sprt_monitor end
 of the carry spectrum): each emit writes the full K-row decision table
 carrying BOTH the cumulative readouts (n/conv per arm, z, boundaries,
 reject flags — the q_group_sequential output contract) and this batch's
 per-look integer increments (inc_n_a …), plus the anchor day (the
-experiment start, fixed by the FIRST batch).  The next batch recovers
-its per-(variant, look) cumulative cells by summing the increments over
-the prior partitions.  Integer sums recover EXACTLY, so the continued
-table is identical to the single-shot one — the multi-batch
-differential gate asserts set equality, not tolerance.  Replay,
-first-batch and ordering rules are the shared sink's
-(streaming/_sink.py); the ordering is checked on entry days.
+experiment start, fixed by the FIRST batch) and the newest entry day.
+The next batch reads only the newest prior partition and recovers its
+per-(variant, look) cells by differencing that table's
+cumulative-over-looks counts along ``look``.  Integer differences
+recover EXACTLY, so the continued table is identical to the single-shot
+one — the multi-batch differential gate asserts set equality, not
+tolerance.  Replay, first-batch and ordering rules are the shared
+sink's (streaming/_sink.py); the ordering is checked on entry days.
 
 Each micro-batch is USER-COMPLETE (a user's whole history arrives in
 one batch — the observation-window-closed delivery, since `converted`
@@ -32,6 +33,7 @@ and the PRECOMPUTED boundary literals come from the shared
 from __future__ import annotations
 
 import datetime as _dt
+from itertools import product
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -45,7 +47,7 @@ from bifrost_spark.queries.experiment_ops import (
 )
 from bifrost_spark.streaming._sink import (
     guard_order,
-    prior_partitions,
+    newest_prior_partition,
     start_batch_sink,
 )
 
@@ -55,31 +57,22 @@ _INC_COLS = ("inc_n_a", "inc_c_a", "inc_n_b", "inc_c_b")
 def _prior_state(
     spark, output_path: str, batch_id: int
 ) -> tuple[list[tuple[str, int, int, int]], object, object]:
-    """(cells, anchor_day, max_entry_day) over the prior partitions
-    (``_sink.prior_partitions``): cells are the summed per-(variant,
-    look) integer increments (≤ 2K rows, driver-held); empty before the
+    """(cells, anchor_day, max_entry_day) from the newest prior partition
+    (``_sink.newest_prior_partition``): its K-row table's
+    cumulative-over-looks counts, differenced along ``look``, are the
+    per-(variant, look) cells (≤ 2K rows, driver-held); empty before the
     first batch."""
-    prior = prior_partitions(spark, output_path, batch_id)
-    if prior is None:
-        return [], None, None
-    rows = (
-        prior.groupBy("look")
-        .agg(
-            *[F.sum(c).alias(c) for c in _INC_COLS],
-            F.min("anchor_day").alias("anchor"),
-            F.max("max_entry_day").alias("entry_max"),
-        )
-        .collect()
-    )
+    prior = newest_prior_partition(spark, output_path, batch_id)
+    rows = [] if prior is None else sorted(prior.collect(), key=lambda r: r["look"])
     if not rows:
         return [], None, None
     cells: list[tuple[str, int, int, int]] = []
+    prev = {"A": (0, 0), "B": (0, 0)}
     for r in rows:
-        cells.append(("A", int(r["look"]), int(r["inc_n_a"]), int(r["inc_c_a"])))
-        cells.append(("B", int(r["look"]), int(r["inc_n_b"]), int(r["inc_c_b"])))
-    anchor = min(r["anchor"] for r in rows)
-    entry_max = max(r["entry_max"] for r in rows)
-    return cells, anchor, entry_max
+        for v, n, c in (("A", r["n_a"], r["conv_a"]), ("B", r["n_b"], r["conv_b"])):
+            cells.append((v, int(r["look"]), n - prev[v][0], c - prev[v][1]))
+            prev[v] = (n, c)
+    return cells, rows[-1]["anchor_day"], rows[-1]["max_entry_day"]
 
 
 def batch_gst_update(
@@ -119,42 +112,18 @@ def batch_gst_update(
         cells = inc
     table = gs_decision_frame(spark, cells)
     inc_wide = inc.groupBy("look").agg(
-        F.coalesce(
-            F.sum(F.when(F.col("variant") == "A", F.col("n"))), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("inc_n_a"),
-        F.coalesce(
-            F.sum(F.when(F.col("variant") == "A", F.col("c"))), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("inc_c_a"),
-        F.coalesce(
-            F.sum(F.when(F.col("variant") == "B", F.col("n"))), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("inc_n_b"),
-        F.coalesce(
-            F.sum(F.when(F.col("variant") == "B", F.col("c"))), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("inc_c_b"),
+        *[
+            F.coalesce(F.sum(F.when(F.col("variant") == v, F.col(m))), F.lit(0))
+            .cast("bigint")
+            .alias(c)
+            for c, (v, m) in zip(_INC_COLS, product("AB", "nc"))
+        ]
     )
-    out = (
-        table.join(inc_wide, "look", "left")
-        .select(
-            "*",
-            *[
-                F.coalesce(F.col(c), F.lit(0)).cast("bigint").alias(f"_{c}")
-                for c in _INC_COLS
-            ],
-        )
-        .drop(*_INC_COLS)
-    )
-    for c in _INC_COLS:
-        out = out.withColumnRenamed(f"_{c}", c)
-    out = out.withColumn("anchor_day", F.lit(anchor).cast("date")).withColumn(
-        "max_entry_day", F.lit(bounds["dmax"]).cast("date")
+    out = table.join(inc_wide, "look", "left").select(
+        *table.columns,
+        *[F.coalesce(F.col(c), F.lit(0)).cast("bigint").alias(c) for c in _INC_COLS],
+        F.lit(anchor).cast("date").alias("anchor_day"),
+        F.lit(bounds["dmax"]).cast("date").alias("max_entry_day"),
     )
     return out, bounds["dmin"], bounds["dmax"]
 

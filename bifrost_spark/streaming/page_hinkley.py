@@ -11,11 +11,12 @@ EXACTLY: each emitted day row keeps its day count ``t`` (integer), the
 cumulative DECIMAL(28,12) metric sum ``sum_m`` and addend sum
 ``sum_add`` (parquet round-trips decimals losslessly), and the running
 minimum ``ph_min`` (a previously-computed double).  Batch N recovers
-the max-day row of the prior partitions and hands those values back to
-the SAME ``ph_walk`` helper — so the continued walk is BIT-IDENTICAL to
-a single-shot walk over all days, which the multi-batch differential
-gate asserts with set equality, not tolerance.  Contrast: the SPRT twin
-carries integer increments and the CUSUM twin raw clamped doubles; PH
+the max-day row of the newest prior partition and hands those values
+back to the SAME ``ph_walk`` helper — so the continued walk is
+BIT-IDENTICAL to a single-shot walk over all days, which the
+multi-batch differential gate asserts with set equality, not
+tolerance.  Contrast: the SPRT twin
+carries integer totals and the CUSUM twin raw clamped doubles; PH
 closes the family with exact decimal carries.  Replay, first-batch and
 ordering rules (whole days per batch) are the shared sink's
 (streaming/_sink.py).
@@ -35,7 +36,7 @@ from bifrost_spark.queries.experiment_ops import ph_decisions, ph_walk
 from bifrost_spark.queries.monitor_ops import cusum_daily_frame
 from bifrost_spark.streaming._sink import (
     guard_order,
-    prior_partitions,
+    newest_prior_partition,
     start_batch_sink,
 )
 
@@ -63,9 +64,9 @@ def batch_ph_update(
 
 def _prior_state(spark, output_path: str, batch_id: int):
     """(t, sum_m, sum_add, ph_min, max_day) from the max-day row of the
-    prior partitions (``_sink.prior_partitions``); the zero state before
-    the first batch."""
-    prior = prior_partitions(spark, output_path, batch_id)
+    newest prior partition (``_sink.newest_prior_partition``); the zero
+    state before the first batch."""
+    prior = newest_prior_partition(spark, output_path, batch_id)
     row = [] if prior is None else prior.orderBy(F.desc("day")).limit(1).collect()
     if not row:
         return 0, None, None, None, None

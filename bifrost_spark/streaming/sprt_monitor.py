@@ -8,10 +8,10 @@ State device (NEW in this family): unlike the drift monitors, the SPRT
 is inherently CUMULATIVE — batch N's llr needs every prior batch's
 counts.  Instead of a state store, the running totals live in the
 monitor's OWN OUTPUT: each emit writes per-day rows carrying both the
-day increments (n_day, c_day) and the cumulative columns; the next batch
-recovers its offsets by summing the increments over the prior
-partitions.  Replay, first-batch and ordering rules are the shared
-sink's (streaming/_sink.py).
+day increments (n_day, c_day) and the cumulative columns (n_cum,
+conv_cum); the next batch takes its offsets from the max-day row of the
+newest prior partition.  Replay, first-batch and ordering rules are the
+shared sink's (streaming/_sink.py).
 
 Each micro-batch is USER-COMPLETE (a user's whole event history arrives
 in one batch — the "observation window closed" delivery every
@@ -33,7 +33,7 @@ from pyspark.sql.streaming import StreamingQuery
 from bifrost_spark.queries.monitor_ops import arm_b_daily_enrollments, sprt_walk
 from bifrost_spark.streaming._sink import (
     guard_order,
-    prior_partitions,
+    newest_prior_partition,
     start_batch_sink,
 )
 
@@ -49,16 +49,14 @@ def batch_sprt_update(
 def _prior_state(
     spark, output_path: str, batch_id: int
 ) -> tuple[int, int, object]:
-    """(n, c, max_day) over the prior partitions (``_sink.prior_partitions``)."""
-    prior = prior_partitions(spark, output_path, batch_id)
-    if prior is None:
+    """(n_cum, conv_cum, day) from the max-day row of the newest prior
+    partition (``_sink.newest_prior_partition``); (0, 0, None) before
+    the first batch."""
+    prior = newest_prior_partition(spark, output_path, batch_id)
+    row = [] if prior is None else prior.orderBy(F.desc("day")).limit(1).collect()
+    if not row:
         return 0, 0, None
-    row = prior.agg(
-        F.coalesce(F.sum("n_day"), F.lit(0)).alias("n"),
-        F.coalesce(F.sum("c_day"), F.lit(0)).alias("c"),
-        F.max("day").alias("max_day"),
-    ).collect()[0]
-    return int(row["n"]), int(row["c"]), row["max_day"]
+    return int(row[0]["n_cum"]), int(row[0]["conv_cum"]), row[0]["day"]
 
 
 def start_sprt_monitor(

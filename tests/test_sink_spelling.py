@@ -5,11 +5,16 @@ renames only in the compaction core ``bifrost_spark/streaming/compact.py``.
 Outside them, no module may
 
 * call ``getFileSystem`` (use ``_sink.hadoop_fs``);
-* call ``write_batch_partition`` or ``output_exists`` (use
-  ``_sink.start_batch_sink`` / ``_sink.prior_partitions``);
+* call ``write_batch_partition`` (use ``_sink.start_batch_sink``);
 * hand ``foreachBatch`` a callback that writes a batch_id-partitioned
   sink itself (directly or through a function of the same module);
 * call ``.rename(`` (commit staged output through ``compact._swap``).
+
+Only ``_sink.py`` reads a monitor's batch_id-partitioned output.  A
+monitor module (one that calls ``start_batch_sink``) may not read files
+itself (``.read``), nor aggregate (``agg``, ``groupBy``, ``rollup``,
+``cube``) over the one partition ``_sink.newest_prior_partition`` hands
+it: that partition's rows already carry the cumulative state.
 
 The timing loop has one spelling too: ``bench.py``'s ``warm`` and
 ``time_ids``.  No module under ``bifrost_spark/`` or ``tools/`` may write
@@ -26,7 +31,9 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "bifrost_spark"
 SINK = PKG / "streaming" / "_sink.py"
 CORE = PKG / "streaming" / "compact.py"
-SINK_CALLS = {"write_batch_partition", "output_exists"}
+SINK_CALLS = {"write_batch_partition"}
+PRIOR_READ = "newest_prior_partition"
+AGGREGATES = {"agg", "groupBy", "groupby", "rollup", "cube"}
 
 
 def _name(call: ast.Call) -> str | None:
@@ -36,6 +43,14 @@ def _name(call: ast.Call) -> str | None:
 
 def _calls(node: ast.AST) -> list[ast.Call]:
     return [n for n in ast.walk(node) if isinstance(n, ast.Call)]
+
+
+def _root(node: ast.AST) -> str | None:
+    """The name a method chain such as ``prior.orderBy(...).limit(1)``
+    starts from."""
+    while isinstance(node, (ast.Attribute, ast.Call, ast.Subscript)):
+        node = node.func if isinstance(node, ast.Call) else node.value
+    return getattr(node, "id", None)
 
 
 def _writes_batch_sink(node: ast.AST, defs: dict, seen: set) -> bool:
@@ -80,6 +95,30 @@ def test_sink_and_hadoop_fs_have_one_spelling():
                     offenders.append(
                         f"{where}:{call.lineno} foreachBatch writes a batch_id sink"
                     )
+    assert offenders == []
+
+
+def test_only_the_sink_reads_monitor_output():
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        calls = _calls(tree)
+        if path == SINK or not any(_name(c) == "start_batch_sink" for c in calls):
+            continue
+        where = path.relative_to(PKG)
+        prior = {PRIOR_READ} | {
+            t.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Assign) and _root(n.value) == PRIOR_READ
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Attribute) and n.attr == "read":
+                offenders.append(f"{where}:{n.lineno} reads files itself")
+        for call in calls:
+            if _name(call) in AGGREGATES and _root(call.func) in prior:
+                offenders.append(f"{where}:{call.lineno} aggregates over prior output")
     assert offenders == []
 
 

@@ -1,8 +1,9 @@
 """Gates for the streaming CUSUM monitor (streaming/cusum_monitor.py):
 exact batch parity with q_cusum_drift when all post-baseline days arrive
 in one micro-batch, bit-identical walk continuation across batches
-(output-carried RAW state), and replay idempotence of the batch_id < N
-recovery predicate — the same three gates as the SPRT twin."""
+(output-carried RAW state), and replay idempotence of the state read
+(only the newest partition below N) — the same three gates as the SPRT
+twin."""
 
 from __future__ import annotations
 

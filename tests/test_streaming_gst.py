@@ -2,8 +2,8 @@
 (streaming/gst_monitor.py): exact decision-table parity with
 q_group_sequential when all enrollments arrive in one micro-batch,
 EXACT (integer-carry) continuation across entry-day-ordered batches,
-replay idempotence of the batch_id < N recovery predicate, and
-backfill rejection — the same four gates as the SPRT/CUSUM/Page-Hinkley
+replay idempotence of the state read (only the newest partition
+below N), and backfill rejection — the same four gates as the SPRT/CUSUM/Page-Hinkley
 twins.
 
 The fixture corpus enrolls every user on day 1 (a single entry day
@@ -96,7 +96,7 @@ def test_single_batch_matches_batch_twin_exactly(spark, gst_dir, tmp_path):
 def test_multi_batch_state_continues_exactly(spark, gst_dir, tmp_path):
     """Entry cohorts split at day 6 across two files: the LAST batch's
     decision table must equal the single-shot batch query EXACTLY —
-    integer increments recover the cumulative cells with no
+    integer counts recover the cumulative cells with no
     tolerance."""
     import time
 

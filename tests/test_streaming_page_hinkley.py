@@ -2,8 +2,8 @@
 (streaming/page_hinkley.py): exact batch parity with q_page_hinkley when
 all days arrive in one micro-batch, BIT-identical walk continuation
 across batches (exact decimal output-carried state — the strongest carry
-in the pairing family), replay idempotence of the batch_id < N recovery
-predicate, and backfill rejection."""
+in the pairing family), replay idempotence of the state read (only the
+newest partition below N), and backfill rejection."""
 
 from __future__ import annotations
 

