@@ -29,26 +29,22 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
-from bifrost_spark.operators.vectors import dot_fast, lit_struct_table
+from bifrost_spark.operators.vectors import sql_dot_fast, sql_struct_table
 
 LITERAL_K_MAX = 64
 
 
-def _rank_cells_literal(col: Column, centers: list[list[float]], nprobe: int) -> Column:
-    # The (cell, centroid) table is ONE parsed literal expression and the
-    # k dot folds run as a transform over it — k·d F.lit() calls cost one
+def _rank_cells_literal(col: str, centers: list[list[float]], nprobe: int) -> Column:
+    # The (cell, centroid) table and the k dot folds over it are ONE parsed
+    # expression (the IVF-PQ encode's device) — k·d F.lit() calls cost one
     # py4j round-trip EACH (plan construction, not execution: measured
-    # seconds of driver wall per ANN query); see vectors.py::lit_vector.
-    tab = lit_struct_table(centers, "cell", "c")
-    ranked = F.sort_array(
-        F.transform(
-            tab,
-            lambda s: F.struct(
-                (-dot_fast(col, s.c)).alias("negd"), s.cell.alias("cell")
-            ),
-        )
+    # seconds of driver wall per ANN query); see vectors.py::sql_literal.
+    tab = sql_struct_table(centers, "cell", "c")
+    return F.expr(
+        f"transform(slice(sort_array(transform({tab}, s -> named_struct("
+        f"'negd', -{sql_dot_fast(col, 's.c')}, 'cell', s.cell))), 1, {nprobe}),"
+        f" s -> s.cell)"
     )
-    return F.transform(F.slice(ranked, 1, nprobe), lambda s: s.cell)
 
 
 def _rank_cells_pandas(centers: list[list[float]], nprobe: int):
@@ -82,18 +78,18 @@ def _rank_cells_pandas(centers: list[list[float]], nprobe: int):
 
 
 def rank_cells(
-    col: Column, centers: list[list[float]], nprobe: int = 1
+    col: str, centers: list[list[float]], nprobe: int = 1
 ) -> Column:
-    """array<int> of the ``nprobe`` nearest cell ids for ``col`` (an
-    array<numeric> vector column), best first.  Dispatches on k: literal
+    """array<int> of the ``nprobe`` nearest cell ids for the array<numeric>
+    vector column named ``col``, best first.  Dispatches on k: literal
     folds under ``LITERAL_K_MAX``, one Arrow-batched BLAS matmul above."""
     if len(centers) <= LITERAL_K_MAX:
         return _rank_cells_literal(col, centers, nprobe)
     return _rank_cells_pandas(centers, nprobe)(col)
 
 
-def assign_cell(col: Column, centers: list[list[float]]) -> Column:
-    """The single nearest cell id (int) for ``col``."""
+def assign_cell(col: str, centers: list[list[float]]) -> Column:
+    """The single nearest cell id (int) for the vector column ``col``."""
     return F.element_at(rank_cells(col, centers, 1), 1)
 
 

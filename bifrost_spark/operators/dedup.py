@@ -333,18 +333,15 @@ def explode_band_buckets(
 
 def _band_bucket_array(bands: int, rows_per_band: int) -> Column:
     """One (band, bucket) struct per LSH band over the ``signature`` column:
-    bucket = xxhash64(band_id, the band's signature slice)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    F.lit(b), *[F.col("signature")[b * rows_per_band + r] for r in range(rows_per_band)]
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
+    bucket = xxhash64(band_id, the band's signature slice), as ONE parsed
+    expression."""
+    structs = []
+    for b in range(bands):
+        band = ", ".join(
+            f"signature[{b * rows_per_band + r}]" for r in range(rows_per_band)
+        )
+        structs.append(f"named_struct('band', {b}, 'bucket', xxhash64({b}, {band}))")
+    return F.expr("array(" + ",".join(structs) + ")")
 
 
 def lsh_candidate_pairs(
@@ -505,22 +502,15 @@ def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # partials still combine map-side.
     df = _spread(df, id_col)
     tok = df.select(F.col(id_col), F.explode(h_arr).alias("h"))
-    bit_sums = [
-        F.sum(
-            F.when(
-                F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-        ).alias(f"b{j}")
+    # The 63 bit-sums and the pack are ONE parsed aggregate expression (the
+    # minhash_signatures device): spelled through the Column API they cost
+    # ~9.6k py4j round-trips of plan construction per call.
+    packed = " + ".join(
+        f"CASE WHEN sum(CASE WHEN shiftright(h, {j}) & 1 = 1 THEN 1 ELSE -1 END)"
+        f" > 0 THEN shiftleft(1L, {j}) ELSE 0L END"
         for j in range(63)
-    ]
-    agg = tok.groupBy(id_col).agg(*bit_sums)
-    packed = None
-    for j in range(63):
-        term = F.when(F.col(f"b{j}") > 0, F.shiftleft(F.lit(1).cast("bigint"), j)).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        packed = term if packed is None else packed + term
-    return agg.select(F.col(id_col), packed.alias("simhash"))
+    )
+    return tok.groupBy(id_col).agg(F.expr(packed).alias("simhash"))
 
 
 def simhash_near_pairs(sim: DataFrame, id_col: str, max_hamming: int = 7) -> DataFrame:
@@ -541,16 +531,14 @@ def simhash_near_pairs(sim: DataFrame, id_col: str, max_hamming: int = 7) -> Dat
             f"max_hamming={max_hamming} exceeds the guaranteed-recall bound "
             f"{n_chunks - 1} of {n_chunks}-chunk blocking"
         )
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk_id"),
-                F.shiftright(F.col("simhash"), c * chunk_bits)
-                .bitwiseAND(F.lit((1 << chunk_bits) - 1))
-                .alias("chunk"),
-            )
+    chunks = F.expr(
+        "array("
+        + ",".join(
+            f"named_struct('chunk_id', {c}, 'chunk',"
+            f" shiftright(simhash, {c * chunk_bits}) & {(1 << chunk_bits) - 1})"
             for c in range(n_chunks)
-        ]
+        )
+        + ")"
     )
     # Same two-consumer shape as lsh_candidate_pairs: both self-join sides
     # would re-derive the fingerprint (scan + token hash aggregation)

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bifrost_spark.operators.vectors import sql_literal
+
 
 def salted_join(
     large: DataFrame,
@@ -52,7 +54,7 @@ def salted_join(
         "__salt", F.pmod(F.xxhash64(*src), F.lit(num_salts)).cast("int")
     )
     salted_small = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(s) for s in range(num_salts)]))
+        "__salt", F.explode(F.expr(sql_literal(list(range(num_salts)))))
     )
     return salted_large.join(salted_small, [on, "__salt"], how).drop("__salt")
 

@@ -16,6 +16,8 @@ dot/norm sums over unit-ish 64-dim embeddings.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -101,48 +103,29 @@ def scale_by(vec: Column, divisor: Column, round_dp: int | None = None) -> Colum
     )
 
 
-def _sql_double(v: float) -> str:
-    """Shortest-exact SQL double literal (Double.parseDouble round-trips
-    repr() bit-exactly; verified incl. exponents and -0.0)."""
-    f = float(v)
-    if f != f or f in (float("inf"), float("-inf")):
-        raise ValueError(f"non-finite literal {v!r} in plan constant")
+def sql_literal(value) -> str:
+    """The one spelling of a Python value as a plan literal: a SQL string
+    that ``F.expr`` parses in ONE py4j round-trip, or that splices into a
+    larger parsed expression.  ``F.array(*[F.lit(v) for v in row])`` costs
+    one round-trip per element — the IVF-PQ codebook tables spent ~13 s of
+    pure plan construction (48k gateway calls) that way.
+
+    Floats become shortest-repr ``D`` literals (Double.parseDouble
+    round-trips repr() bit-exactly, exponents and -0.0 included) and a
+    non-finite value raises; ints keep ``F.lit``'s INT-or-BIGINT-by-
+    magnitude type; lists and tuples become ``array(…)``, dicts ``map(…)``.
+    """
+    if isinstance(value, (list, tuple)):
+        return "array(" + ",".join(sql_literal(v) for v in value) + ")"
+    if isinstance(value, dict):
+        pairs = (sql_literal(x) for kv in value.items() for x in kv)
+        return "map(" + ",".join(pairs) + ")"
+    if isinstance(value, int):
+        return str(value)
+    f = float(value)
+    if not math.isfinite(f):
+        raise ValueError(f"non-finite literal {value!r} in plan constant")
     return f"{f!r}D"
-
-
-def lit_vector(row: list[float]) -> Column:
-    """array<double> literal built as ONE parsed SQL expression.
-
-    ``F.array(*[F.lit(v) for v in row])`` costs one py4j round-trip per
-    element — building the IVF-PQ codebook tables this way spent ~13 s of
-    pure plan construction (48k gateway calls) per query at k·d ≈ 2k
-    literals.  One F.expr string is one round-trip regardless of size."""
-    return F.expr("array(" + ",".join(_sql_double(v) for v in row) + ")")
-
-
-def lit_bigint_vector(row: list[int]) -> Column:
-    """array<bigint> literal as ONE parsed SQL expression (see lit_vector)."""
-    return F.expr("array(" + ",".join(f"{int(v)}L" for v in row) + ")")
-
-
-def sql_matrix(rows: list[list[float]]) -> str:
-    """The SQL-string body of :func:`lit_matrix` — for embedding a literal
-    matrix inside a LARGER single-parse expression (r12: the IVF-PQ
-    encode/ADC trees are built as one SQL string each; splicing the
-    codebook literals in keeps the whole tree at one py4j round-trip)."""
-    return (
-        "array("
-        + ",".join(
-            "array(" + ",".join(_sql_double(v) for v in r) + ")" for r in rows
-        )
-        + ")"
-    )
-
-
-def lit_matrix(rows: list[list[float]]) -> Column:
-    """array<array<double>> literal as ONE parsed SQL expression (see
-    lit_vector for why)."""
-    return F.expr(sql_matrix(rows))
 
 
 def sql_dot_fast(a: str, b: str) -> str:
@@ -158,26 +141,17 @@ def sql_dot_fast(a: str, b: str) -> str:
 def sql_struct_table(
     rows: list[list[float]], id_field: str, vec_field: str
 ) -> str:
-    """SQL-string body of :func:`lit_struct_table` (see sql_matrix)."""
+    """array<struct<id_field int, vec_field array<double>>> literal — the
+    (id, centroid) lookup table shape consumed by transform-based argmin
+    scans — as a SQL string (see :func:`sql_literal`)."""
     return (
         "array("
         + ",".join(
-            f"named_struct('{id_field}', {i}, '{vec_field}', array("
-            + ",".join(_sql_double(v) for v in r)
-            + "))"
+            f"named_struct('{id_field}', {i}, '{vec_field}', {sql_literal(r)})"
             for i, r in enumerate(rows)
         )
         + ")"
     )
-
-
-def lit_struct_table(
-    rows: list[list[float]], id_field: str, vec_field: str
-) -> Column:
-    """array<struct<id_field int, vec_field array<double>>> literal — the
-    (id, centroid) lookup table shape consumed by transform-based argmin
-    scans — as ONE parsed SQL expression (see lit_vector for why)."""
-    return F.expr(sql_struct_table(rows, id_field, vec_field))
 
 
 def cosine_pair_candidates(
@@ -249,29 +223,23 @@ def _srp_signs(seed: int, bit: int, dim: int) -> list[float]:
     return out
 
 
-def srp_bucket(vec: Column, dim: int, n_bits: int = 16, seed: int = 42) -> Column:
-    """Sign-random-projection LSH bucket id (bigint).
+def srp_bucket(vec: str, dim: int, n_bits: int = 16, seed: int = 42) -> str:
+    """Sign-random-projection LSH bucket id (bigint) of the vector column
+    named ``vec``, as a SQL string.
 
     bucket bit b = sign(vec · signs_b) where signs_b is a deterministic ±1
     literal array (see ``_srp_signs``).  Per row: n_bits double-fold dot
     products over the vector — no per-row hashing at all.
 
-    The n_bits × dim sign matrix is ONE parsed literal (lit_matrix) and
-    the per-bit terms come from an index-aware transform over it — the
-    per-element F.lit() spelling cost n_bits·dim py4j round-trips of plan
-    construction per query.  Same bucket value: Σ (1 << b) over positive
-    projections.
+    The n_bits × dim sign matrix is one :func:`sql_literal` and the
+    per-bit terms come from an index-aware transform over it, so callers
+    splice the whole bucket into one parsed expression (the Column
+    spelling cost ~250 py4j round-trips of plan construction per bucket).
+    Bucket value: Σ (1 << b) over positive projections.
     """
-    signs_tab = lit_matrix([_srp_signs(seed, bit, dim) for bit in range(n_bits)])
-    terms = F.transform(
-        signs_tab,
-        lambda s, i: F.when(
-            dot_fast(vec, s) > 0,
-            # call_function: the PySpark shiftleft wrapper only takes a
-            # Python int for numBits; the SQL function accepts a column
-            F.call_function("shiftleft", F.lit(1).cast("bigint"), i),
-        ).otherwise(F.lit(0).cast("bigint")),
-    )
-    return F.aggregate(
-        terms, F.lit(0).cast("bigint"), lambda acc, x: acc + x
+    signs = sql_literal([_srp_signs(seed, bit, dim) for bit in range(n_bits)])
+    return (
+        f"aggregate(transform({signs}, (s, i) -> CASE WHEN"
+        f" {sql_dot_fast(vec, 's')} > 0 THEN shiftleft(1L, i) ELSE 0L END),"
+        f" 0L, (acc, x) -> acc + x)"
     )

@@ -711,7 +711,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the centroid table (|labels|·d rows — the bounded
     aggregate proven by q_embedding_centroid) is collected ONCE and
     folded back as per-label literal arrays (the q_dsir_weights
-    fold-back device, one parsed expression per label), so the distance
+    fold-back device, one parsed CASE over all labels), so the distance
     is a SCAN-LOCAL zip_with/fold — no join, no explode, nothing but
     (label, vec_id, dist²) skinny rows ever shuffle, and the per-label
     top-k window partitions by label.  Two corpus passes total
@@ -737,7 +737,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joined back on label (Catalyst broadcasts it while it fits,
     shuffle-joins beyond that).  Same rounded values either way, so the
     output is identical — pinned by the gate test."""
-    from bifrost_spark.operators.vectors import lit_vector
+    from bifrost_spark.operators.vectors import sql_literal
 
     # size > 0 also drops NULL (size(NULL) is NULL) AND zero-length
     # vectors: the oracle's UNNEST(range(0)) emits no rows for an empty
@@ -784,13 +784,12 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         by_label: dict = {}
         for r in cent_rows:
             by_label.setdefault(r["label"], {})[r["pos"]] = r["c"]
-        case = None
-        for lbl in sorted(by_label):
-            posmap = by_label[lbl]
-            arr = lit_vector([posmap[p] for p in range(max(posmap) + 1)])
-            cond = F.col("label") == F.lit(lbl)
-            case = F.when(cond, arr) if case is None else case.when(cond, arr)
-        c_arr = case.otherwise(F.lit(None).cast("array<double>"))
+        whens = " ".join(
+            f"WHEN label = {sql_literal(lbl)} THEN"
+            f" {sql_literal([posmap[p] for p in range(max(posmap) + 1)])}"
+            for lbl, posmap in sorted(by_label.items())
+        )
+        c_arr = F.expr(f"CASE {whens} ELSE CAST(NULL AS ARRAY<DOUBLE>) END")
 
     dec0 = F.lit(0).cast("decimal(28,12)")
     sq = F.zip_with(

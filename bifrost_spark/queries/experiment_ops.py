@@ -59,6 +59,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bifrost_spark.operators.vectors import sql_literal
 from bifrost_spark.queries.dist_tests import _DAILY_SQL, _daily_means
 from bifrost_spark.registry import query
 from bifrost_spark.tables import load_table
@@ -298,7 +299,7 @@ def gs_decision_frame(spark: SparkSession, looks: DataFrame) -> DataFrame:
         ).alias("z"),
     )
     obf = F.element_at(
-        F.array(*[F.lit(b) for b in _GS_OBF_BOUNDS]), F.col("look").cast("int")
+        F.expr(sql_literal(_GS_OBF_BOUNDS)), F.col("look").cast("int")
     )
     return z.select(
         F.col("look").cast("bigint").alias("look"),

@@ -422,12 +422,13 @@ def dsir_weights(
     # per-token addend as a literal lookup — the log2/round/decimal chain
     # is IDENTICAL to the former join spelling (Spark evaluates the same
     # expressions on the same integer counts), so results are bit-equal
-    # single-expression literals: the per-element F.lit spelling costs one
-    # py4j round-trip per bucket (2×1024 calls at hires) of plan-build time
-    from bifrost_spark.operators.vectors import lit_bigint_vector
+    # single-expression BIGINT literals (vectors.py::sql_literal): the
+    # per-element F.lit spelling costs one py4j round-trip per bucket
+    # (2×1024 calls at hires) of plan-build time
+    from bifrost_spark.operators.vectors import sql_literal
 
-    cr_arr = lit_bigint_vector(cr)
-    ct_arr = lit_bigint_vector(ct)
+    cr_arr = F.expr(f"CAST({sql_literal(cr)} AS ARRAY<BIGINT>)")
+    ct_arr = F.expr(f"CAST({sql_literal(ct)} AS ARRAY<BIGINT>)")
     addend = F.round(
         F.log2(F.element_at(ct_arr, F.col("bucket") + 1) + 1), 12
     ).cast("decimal(28,12)") - F.round(
@@ -615,7 +616,7 @@ def quality_classifier(
     # NULL-source docs are NOT target: isin() is NULL on a NULL source,
     # which cast to a NULL label and np.float64(None) = NaN — one
     # missing-metadata doc in the sample NaN-poisoned the whole gradient
-    # and every corpus score (fuzzer finding, caught by lit_vector's
+    # and every corpus score (fuzzer finding, caught by sql_literal's
     # non-finite guard; the DSIR twin at line ~396 was already safe —
     # count_if skips NULL)
     is_target = F.coalesce(
@@ -647,9 +648,9 @@ def quality_classifier(
     w, b = _qc_train(X, y)
 
     # corpus-wide scoring: mean of w[bucket] per doc + bias, all JVM
-    from bifrost_spark.operators.vectors import lit_vector
+    from bifrost_spark.operators.vectors import sql_literal
 
-    w_arr = lit_vector([float(v) for v in w])
+    w_arr = F.expr(sql_literal(list(w)))
     scored = tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
         F.avg(F.element_at(w_arr, F.col("bucket") + 1)).alias("wx"),

@@ -494,7 +494,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_rows=SEMDEDUP_FIT_SAMPLE,
     )
     assigned = unit.select(
-        "vec_id", "unit", assign_cell(F.col("unit"), centers).alias("cell")
+        "vec_id", "unit", assign_cell("unit", centers).alias("cell")
     )
 
     def _cell_pairs(pdf):

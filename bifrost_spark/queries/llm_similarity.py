@@ -14,6 +14,9 @@ from bifrost_spark.operators.vectors import (
     dot_fast,
     norm2_fast,
     scale_by,
+    sql_dot_fast,
+    sql_literal,
+    sql_struct_table,
     srp_bucket,
 )
 from bifrost_spark.registry import query
@@ -255,30 +258,27 @@ def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").filter(
         norm2_fast(F.col("embedding")) > 0
     )
-    buckets = F.array(
-        *[
-            srp_bucket(F.col("embedding"), EMB_DIM, n_bits=n_bits, seed=1000 + t)
-            for t in range(n_tables)
-        ]
+    buckets = [
+        srp_bucket("embedding", EMB_DIM, n_bits=n_bits, seed=1000 + t)
+        for t in range(n_tables)
+    ]
+    # (table, bucket) + one-bit-flip probes, query side only (flip 0 is
+    # the bucket itself)
+    probe_pairs = F.expr(
+        "array("
+        + ",".join(
+            f"named_struct('table_id', {t}, 'bucket', ({base}) ^ {flip})"
+            for t, base in enumerate(buckets)
+            for flip in [0] + [1 << b for b in range(n_bits)]
+        )
+        + ")"
     )
-    # (table, bucket) + one-bit-flip probes, query side only
-    probe_pairs = []
-    for t in range(n_tables):
-        base = srp_bucket(F.col("embedding"), EMB_DIM, n_bits=n_bits, seed=1000 + t)
-        probe_pairs.append(F.struct(F.lit(t).alias("table_id"), base.alias("bucket")))
-        for b in range(n_bits):
-            probe_pairs.append(
-                F.struct(
-                    F.lit(t).alias("table_id"),
-                    base.bitwiseXOR(F.lit(1 << b)).alias("bucket"),
-                )
-            )
     q = F.broadcast(
         e.filter(F.col("vec_id") < N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
-            F.explode(F.array(*probe_pairs)).alias("tb"),
+            F.explode(probe_pairs).alias("tb"),
         )
         .select("query_id", "q_emb", "tb.table_id", "tb.bucket")
     )
@@ -290,7 +290,9 @@ def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = spread(e, "vec_id").select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"),
-        F.posexplode(buckets).alias("table_id", "bucket"),
+        F.posexplode(F.expr("array(" + ",".join(buckets) + ")")).alias(
+            "table_id", "bucket"
+        ),
     )
     cand = (
         c.join(q, ["table_id", "bucket"])
@@ -377,14 +379,14 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = unit.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"),
-        assign_cell(F.col("unit"), centers).alias("cell"),
+        assign_cell("unit", centers).alias("cell"),
     )
     probes = F.broadcast(
         unit.filter(F.col("vec_id") < N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
-            F.explode(rank_cells(F.col("unit"), centers, nprobe)).alias("cell"),
+            F.explode(rank_cells("unit", centers, nprobe)).alias("cell"),
         )
     )
     scored = (
@@ -734,19 +736,17 @@ def _ivfpq_core(
     # The PQ codebooks are inherently small (m_sub·k_pq·d_sub = 1024
     # floats here; k_pq ≤ 256 by construction — codes are one byte), so
     # literal codebook lookups never face the production-k problem.
-    # single-expression literals (vectors.py::lit_matrix): the per-element
+    # single-expression literals (vectors.py::sql_literal): the per-element
     # F.lit spelling cost one py4j round-trip per float — 48k gateway calls
     # ≈ 13 s of pure PLAN CONSTRUCTION for this query's codebook tables,
     # measured before execution even started
-    from bifrost_spark.operators.vectors import lit_matrix
-
-    centers_lit = lit_matrix(centers)
+    centers_lit = F.expr(sql_literal(centers))
 
     with_res = unit.select(
         "vec_id",
         "embedding",
         "unit",
-        assign_cell(F.col("unit"), centers).alias("cell"),
+        assign_cell("unit", centers).alias("cell"),
     ).withColumn(
         "res",
         F.zip_with(
@@ -768,8 +768,6 @@ def _ivfpq_core(
     # (the codebook literal tables splice in via sql_struct_table) — the
     # Column spelling cost ~30 py4j round-trips per subspace of pure
     # plan-construction latency; the expression tree is identical.
-    from bifrost_spark.operators.vectors import sql_struct_table
-
     def sub_argmin_sql(m: int) -> str:
         sl = f"slice(res, {m * d_sub + 1}, {d_sub})"
         tab = sql_struct_table(codebooks[m], "code", "c")
@@ -794,22 +792,20 @@ def _ivfpq_core(
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("unit").alias("q_unit"),
-            F.explode(rank_cells(F.col("unit"), centers, nprobe)).alias("cell"),
+            F.explode(rank_cells("unit", centers, nprobe)).alias("cell"),
         )
     )
 
     # ADC: approx cos = q·center[cell] + Σ_m q_m · codebook_m[code_m]
     # — also ONE parsed SQL string (sql_dot_fast is the exact twin of the
     # dot_fast Column spelling, casts and 0.0D seed included)
-    from bifrost_spark.operators.vectors import sql_dot_fast, sql_matrix
-
     adc_sql = sql_dot_fast(
-        "q_unit", f"element_at({sql_matrix(centers)}, cell + 1)"
+        "q_unit", f"element_at({sql_literal(centers)}, cell + 1)"
     )
     for m in range(m_sub):
         adc_sql += " + " + sql_dot_fast(
             f"slice(q_unit, {m * d_sub + 1}, {d_sub})",
-            f"element_at({sql_matrix(codebooks[m])},"
+            f"element_at({sql_literal(codebooks[m])},"
             f" element_at(codes, {m + 1}) + 1)",
         )
     cand = (
@@ -952,7 +948,7 @@ def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = len(head[0]["emb"])
     if d == 0:
         # zero-width vectors (junk feed): no coordinates, no components —
-        # and lit_struct_table([]) would emit an untyped array() whose
+        # and sql_struct_table([]) would emit an untyped array() whose
         # field access fails analysis (review finding)
         return spark.createDataFrame(
             [], "vec_id long, component bigint, loading double"
@@ -976,21 +972,16 @@ def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
             W[:, j] = -col
 
     # projection table: one literal row per component with the centering
-    # pre-folded ((x − μ)·w = x·w − μ·w); built as ONE parsed expression
-    from bifrost_spark.operators.vectors import dot_fast, lit_struct_table
-
-    comp_tab = lit_struct_table(
+    # pre-folded ((x − μ)·w = x·w − μ·w); the table and the k projections
+    # are ONE parsed expression (the IVF-PQ encode's device)
+    comp_tab = sql_struct_table(
         [list(W[:, j]) + [float(mu @ W[:, j])] for j in range(W.shape[1])],
         "j",
         "wb",  # wb = the component vector with μ·w appended as last slot
     )
-    pc = F.transform(
-        comp_tab,
-        lambda s: F.round(
-            dot_fast(F.col("emb"), F.slice(s.wb, 1, d))
-            - F.element_at(s.wb, d + 1),
-            6,
-        ),
+    proj = sql_dot_fast("emb", f"slice(s.wb, 1, {d})")
+    pc = F.expr(
+        f"transform({comp_tab}, s -> round({proj} - element_at(s.wb, {d + 1}), 6))"
     )
     # Flatten the k-array to scalar rows: posexplode is scan-local (no
     # shuffle — k rows emitted per input row inside the same stage).

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bifrost_spark.operators.vectors import sql_literal
 from bifrost_spark.queries._util import sql_dsum
 from bifrost_spark.registry import query
 from bifrost_spark.tables import load_table
@@ -362,7 +363,7 @@ def q_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundaries strictly above this row's balance (ties share a bucket)
     part_expr = (
         F.aggregate(
-            F.array(*[F.lit(b) for b in bounds]),
+            F.expr(sql_literal(bounds)),
             F.lit(0),
             lambda acc, b: acc + F.when(F.col("c_acctbal") < b, 1).otherwise(0),
         )
@@ -382,9 +383,7 @@ def q_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # empty-table guard (fuzzer finding): F.create_map() with no entries
     # types as map<void,void> and map()[part] fails analysis
     offset_col = (
-        F.create_map(*[F.lit(x) for p in offsets for x in (p, offsets[p])])[
-            F.col("part")
-        ]
+        F.expr(sql_literal(offsets))[F.col("part")]
         if offsets
         else F.lit(0)
     )

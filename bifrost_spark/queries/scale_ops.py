@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bifrost_spark.operators.bloom import BLOOM_DEMO_CONFS, compile_with_confs
+from bifrost_spark.operators.vectors import sql_literal
 from bifrost_spark.queries._util import dsum, sql_dsum
 from bifrost_spark.registry import query
 from bifrost_spark.tables import load_table
@@ -1005,7 +1006,7 @@ def q_quantile_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cum",
         "total",
         F.explode(
-            F.array(*[F.lit(p).cast("bigint") for p in _QSK_PCTS])
+            F.expr(f"CAST({sql_literal(_QSK_PCTS)} AS ARRAY<BIGINT>)")
         ).alias("q_pct"),
     )
     return qd.groupBy("week", "q_pct").agg(

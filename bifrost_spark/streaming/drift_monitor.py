@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from bifrost_spark.operators.vectors import sql_literal
 from bifrost_spark.streaming._sink import start_batch_sink
 
 #: PSI above this is the conventional "population has shifted" alarm.
@@ -113,7 +114,7 @@ def batch_psi(batch: DataFrame, col: str, ref: ReferenceHistogram) -> DataFrame:
     )
     tot = full.agg(F.sum("c").alias("n"))
     pa_ref = F.element_at(
-        F.array(*[F.lit(p) for p in ref.smoothed]), F.col("bin").cast("int") + 1
+        F.expr(sql_literal(ref.smoothed)), F.col("bin").cast("int") + 1
     )
     probs = full.crossJoin(F.broadcast(tot)).select(
         "bin",

@@ -39,16 +39,16 @@ def test_plan_size_is_o1_in_k_above_literal_cap(spark):
     df, _ = _vec_df(spark)
     lit_k = cells.LITERAL_K_MAX
     plan_literal = df.select(
-        cells.assign_cell(F.col("unit"), _centers(lit_k)[0]).alias("cell")
+        cells.assign_cell("unit", _centers(lit_k)[0]).alias("cell")
     )._jdf.queryExecution().optimizedPlan().toString()
     plan_pandas = df.select(
-        cells.assign_cell(F.col("unit"), _centers(256)[0]).alias("cell")
+        cells.assign_cell("unit", _centers(256)[0]).alias("cell")
     )._jdf.queryExecution().optimizedPlan().toString()
     assert len(plan_pandas) < len(plan_literal)
     assert len(plan_pandas) < 5_000, len(plan_pandas)
     # and k=4096 costs the same plan as k=256
     plan_big = df.select(
-        cells.assign_cell(F.col("unit"), _centers(4096)[0]).alias("cell")
+        cells.assign_cell("unit", _centers(4096)[0]).alias("cell")
     )._jdf.queryExecution().optimizedPlan().toString()
     assert abs(len(plan_big) - len(plan_pandas)) < 100
 
@@ -64,7 +64,7 @@ def test_paths_agree_with_numpy_ground_truth(spark, nprobe):
             r.vec_id: list(r.cells)
             for r in df.select(
                 "vec_id",
-                cells.rank_cells(F.col("unit"), centers_list, nprobe).alias("cells"),
+                cells.rank_cells("unit", centers_list, nprobe).alias("cells"),
             ).collect()
         }
         scores = v @ c.T
@@ -86,7 +86,7 @@ def test_tie_break_prefers_lower_cell_id(spark):
         pad /= np.linalg.norm(pad, axis=1, keepdims=True) * 2  # strictly worse
         centers = [dup, dup] + [[float(x) for x in r] for r in pad]
         row = df.select(
-            cells.rank_cells(F.col("unit"), centers, 2).alias("cells")
+            cells.rank_cells("unit", centers, 2).alias("cells")
         ).collect()[0]
         assert list(row.cells)[:2] == [0, 1], (k, row.cells)
 
@@ -205,40 +205,88 @@ def test_rotate_vectors_matches_numpy(spark):
 
 
 def test_lit_builders_round_trip_bit_exactly(spark):
-    """lit_vector / lit_matrix / lit_struct_table build plan literals as ONE
-    parsed SQL expression (the per-element F.lit spelling cost one py4j
-    round-trip per float — ~13 s of plan construction for the IVF-PQ
-    codebooks, round 5).  The parse must be BIT-exact for arbitrary
-    doubles: repr() is shortest-exact and Double.parseDouble round-trips
-    it, including exponents and -0.0."""
+    """sql_literal / sql_struct_table build plan literals as ONE parsed SQL
+    expression (the per-element F.lit spelling cost one py4j round-trip
+    per float — ~13 s of plan construction for the IVF-PQ codebooks,
+    round 5).  The parse must be BIT-exact for arbitrary doubles: repr()
+    is shortest-exact and Double.parseDouble round-trips it, including
+    exponents and -0.0.  Ints keep F.lit's type: INT while they fit, so a
+    2**62 element widens the array to BIGINT."""
     import struct as _struct
 
-    from bifrost_spark.operators.vectors import (
-        lit_bigint_vector,
-        lit_matrix,
-        lit_struct_table,
-        lit_vector,
-    )
+    from bifrost_spark.operators.vectors import sql_literal, sql_struct_table
 
     vals = [0.1, -1.5e-18, 2.3456789012345678e30, 7.123456789012345e-05,
             -0.0, 1.0, -3.141592653589793]
-    row = spark.range(1).select(
-        lit_vector(vals).alias("v"),
-        lit_matrix([vals, vals[::-1]]).alias("m"),
-        lit_struct_table([vals], "cell", "c").alias("t"),
-        lit_bigint_vector([0, -7, 2**62]).alias("b"),
-    ).collect()[0]
+    df = spark.range(1).select(
+        F.expr(sql_literal(vals)).alias("v"),
+        F.expr(sql_literal([vals, vals[::-1]])).alias("m"),
+        F.expr(sql_struct_table([vals], "cell", "c")).alias("t"),
+        F.expr(sql_literal([0, -7, 2**62])).alias("b"),
+        F.expr(sql_literal(7)).alias("i"),
+    )
+    assert [f.dataType.simpleString() for f in df.schema.fields] == [
+        "array<double>",
+        "array<array<double>>",
+        "array<struct<cell:int,c:array<double>>>",
+        "array<bigint>",
+        "int",
+    ]
+    row = df.collect()[0]
     bits = lambda x: _struct.pack(">d", x)
     assert [bits(a) for a in row["v"]] == [bits(v) for v in vals]
     assert [bits(a) for a in row["m"][1]] == [bits(v) for v in vals[::-1]]
     assert row["t"][0]["cell"] == 0
     assert [bits(a) for a in row["t"][0]["c"]] == [bits(v) for v in vals]
     assert list(row["b"]) == [0, -7, 2**62]
+    assert row["i"] == 7
 
 
 def test_lit_builders_reject_non_finite():
-    from bifrost_spark.operators.vectors import lit_vector
+    from bifrost_spark.operators.vectors import sql_literal, sql_struct_table
 
     for bad in (float("nan"), float("inf"), float("-inf")):
         with pytest.raises(ValueError):
-            lit_vector([1.0, bad])
+            sql_literal([1.0, bad])
+        with pytest.raises(ValueError):
+            sql_struct_table([[1.0, bad]], "cell", "c")
+
+
+def _build_simhash64(spark):
+    from bifrost_spark.operators.dedup import simhash64
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    return lambda: simhash64(docs, "text", "doc_id")
+
+
+def _build_srp_bucket(spark):
+    from bifrost_spark.operators.vectors import srp_bucket
+
+    return lambda: F.expr(srp_bucket("embedding", 64, n_bits=16, seed=1000))
+
+
+@pytest.mark.parametrize(
+    "build, budget",
+    [(_build_simhash64, 1000), (_build_srp_bucket, 25)],
+    ids=["simhash64", "srp_bucket"],
+)
+def test_kernel_build_py4j_budget(spark, monkeypatch, build, budget):
+    """Building a literal-heavy kernel is a handful of parsed expressions,
+    not one py4j command per literal or per Column node (the Column
+    spelling sent 9,621 commands per simhash64 and 249 per srp_bucket).
+    Object releases ("m" commands, sent whenever Python's GC runs) are not
+    counted."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting_send(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    kernel = build(spark)
+    monkeypatch.setattr(client, "send_command", counting_send)
+    kernel()
+    monkeypatch.undo()
+    assert len(sent) < budget

@@ -20,12 +20,22 @@ The timing loop has one spelling too: ``bench.py``'s ``warm`` and
 ``time_ids``.  No module under ``bifrost_spark/`` or ``tools/`` may write
 to the ``noop`` sink; the sweep and the scale audit time ids by calling
 bench's loop.
+
+Plan literals have one spelling: the SQL strings of
+``bifrost_spark/operators/vectors.py`` (``sql_literal``,
+``sql_struct_table``), parsed once by ``F.expr`` or spliced into a larger
+parsed expression.  Outside vectors.py no ``F.array`` / ``F.create_map``
+call may take a starred comprehension of ``F.lit`` (one py4j round-trip
+per element), and no module may name the retired Column wrappers
+``lit_vector``, ``lit_bigint_vector``, ``lit_matrix``, ``lit_struct_table``
+or their string helpers ``sql_matrix`` and ``_sql_double``.
 """
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "bifrost_spark"
@@ -34,6 +44,11 @@ CORE = PKG / "streaming" / "compact.py"
 SINK_CALLS = {"write_batch_partition"}
 PRIOR_READ = "newest_prior_partition"
 AGGREGATES = {"agg", "groupBy", "groupby", "rollup", "cube"}
+VECTORS = PKG / "operators" / "vectors.py"
+LITERAL_TABLES = {"array", "create_map"}
+RETIRED_LITERALS = re.compile(
+    r"\b(lit_vector|lit_bigint_vector|lit_matrix|lit_struct_table|sql_matrix|_sql_double)\b"
+)
 
 
 def _name(call: ast.Call) -> str | None:
@@ -129,4 +144,27 @@ def test_timing_loop_has_one_spelling():
             values = [*call.args, *(k.value for k in call.keywords)]
             if any(isinstance(v, ast.Constant) and v.value == "noop" for v in values):
                 offenders.append(f"{path.relative_to(ROOT)}:{call.lineno} writes to the noop sink")
+    assert offenders == []
+
+
+def _lit_comprehension(arg: ast.AST) -> bool:
+    """``*[F.lit(x) ... for x in xs]`` (or a generator of the same)."""
+    return (
+        isinstance(arg, ast.Starred)
+        and isinstance(arg.value, (ast.ListComp, ast.GeneratorExp))
+        and any(_name(c) == "lit" for c in _calls(arg.value.elt))
+    )
+
+
+def test_plan_literals_have_one_spelling():
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        text = path.read_text()
+        where = path.relative_to(PKG)
+        offenders += [f"{where} names {n}" for n in RETIRED_LITERALS.findall(text)]
+        if path == VECTORS:
+            continue
+        for call in _calls(ast.parse(text, str(path))):
+            if _name(call) in LITERAL_TABLES and any(map(_lit_comprehension, call.args)):
+                offenders.append(f"{where}:{call.lineno} builds a per-element F.lit table")
     assert offenders == []
