@@ -53,9 +53,12 @@ def salted_join(
     salted_large = large.withColumn(
         "__salt", F.pmod(F.xxhash64(*src), F.lit(num_salts)).cast("int")
     )
+    # shuffle_hash: the S×-replicated small side would otherwise fall under
+    # the broadcast threshold and be collected and hashed on the driver
+    # (360k rows for q_join_skew_salted at sf0.03), which undoes the salting
     salted_small = small.withColumn(
         "__salt", F.explode(F.expr(sql_literal(list(range(num_salts)))))
-    )
+    ).hint("shuffle_hash")
     return salted_large.join(salted_small, [on, "__salt"], how).drop("__salt")
 
 

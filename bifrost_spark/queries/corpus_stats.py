@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bifrost_spark.operators.dedup import token_gram_hashes, word_array
+from bifrost_spark.operators.vectors import local_frame
 from bifrost_spark.queries.llm_text import VOCAB_GROWTH_SQL
 from bifrost_spark.registry import query
 from bifrost_spark.tables import load_table
@@ -719,8 +720,8 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocab = vocab.select(
             "wc", apply_merge(F.col("syms")).alias("syms")
         ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
-        merges, schema="step bigint, p1 string, p2 string, pair_freq bigint"
+    return local_frame(
+        spark, merges, "step bigint, p1 string, p2 string, pair_freq bigint"
     )
 
 

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bifrost_spark.operators.dedup import contamination_hits, contamination_hits_sql
+from bifrost_spark.operators.vectors import local_frame
 from bifrost_spark.queries._util import spread
 from bifrost_spark.queries.llm_text import (
     _BM25_SQL,
@@ -764,8 +765,8 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and within the gate the SAME result builds the literals (no re-scan)
     cent_rows = cent_agg.limit(_OUTLIER_FOLDBACK_GATE_ROWS + 1).collect()
     if not cent_rows:
-        return spark.createDataFrame(
-            [], "label int, vec_id bigint, dist double, rnk bigint"
+        return local_frame(
+            spark, [], "label int, vec_id bigint, dist double, rnk bigint"
         )
     if len(cent_rows) > _OUTLIER_FOLDBACK_GATE_ROWS:
         # high-cardinality labels: engine-side fold-back.  array_sort on

@@ -59,7 +59,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bifrost_spark.operators.vectors import sql_literal
+from bifrost_spark.operators.vectors import local_frame, sql_literal
 from bifrost_spark.queries.dist_tests import _DAILY_SQL, _daily_means
 from bifrost_spark.registry import query
 from bifrost_spark.tables import load_table
@@ -249,7 +249,7 @@ def gs_decision_frame(spark: SparkSession, looks: DataFrame) -> DataFrame:
         spark.range(1, _GS_LOOKS + 1)
         .select(F.col("id").alias("look"))
         .crossJoin(
-            spark.createDataFrame([("A",), ("B",)], "variant string")
+            local_frame(spark, [("A",), ("B",)], "variant string")
         )
         .join(looks, ["variant", "look"], "left")
         .select(

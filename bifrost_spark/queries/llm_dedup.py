@@ -29,6 +29,7 @@ from bifrost_spark.operators.dedup import (
 from bifrost_spark.operators.vectors import (
     cosine,
     cosine_pair_candidates,
+    local_frame,
     norm2_fast,
     scale_by,
 )
@@ -486,8 +487,8 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n == 0:
         # no usable vectors (empty / all-zero / all-NULL corpus): nothing
         # to dedup — an empty drop list, not a crashed fit (fuzzer finding)
-        return spark.createDataFrame(
-            [], "drop_id long, keeper_id long, cluster bigint, cos_sim double"
+        return local_frame(
+            spark, [], "drop_id long, keeper_id long, cluster bigint, cos_sim double"
         )
     centers = train_kmeans(
         unit, "unit", "vec_id", semdedup_k(n), seed=13,

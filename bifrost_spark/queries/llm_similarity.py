@@ -12,6 +12,7 @@ from pyspark.sql.window import Window
 from bifrost_spark.operators.vectors import (
     cosine,
     dot_fast,
+    local_frame,
     norm2_fast,
     scale_by,
     sql_dot_fast,
@@ -372,8 +373,8 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # no usable vectors (empty / all-zero / all-NULL corpus): an
         # index with no cells serves no candidates (fuzzer finding —
         # unguarded, the empty training sample AxisError'd the fit)
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rnk bigint"
+        return local_frame(
+            spark, [], "query_id long, neighbor_id long, cos_sim double, rnk bigint"
         )
 
     corpus = unit.select(
@@ -510,8 +511,8 @@ def q_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not train_rows:
         # empty train side (fuzz corpora): no neighbor exists — an empty
         # confusion matrix, not a crashed fit
-        return spark.createDataFrame(
-            [], f"true_label {label_t}, pred_label {label_t}, n bigint"
+        return local_frame(
+            spark, [], f"true_label {label_t}, pred_label {label_t}, n bigint"
         )
     train_rows.sort(key=lambda r: r[0])  # vec_id asc → stable-argsort ties
     t_ids = np.array([r[0] for r in train_rows], dtype=np.int64)
@@ -576,8 +577,8 @@ def q_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver, and the t_nrm decimal fold runs over |train| local rows in
     # the same JVM arithmetic the scan spelling used
     train_df = F.broadcast(
-        spark.createDataFrame(
-            train_rows, f"vec_id long, label {label_t}, embedding {emb_t}"
+        local_frame(
+            spark, train_rows, f"vec_id long, label {label_t}, embedding {emb_t}"
         ).select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("label").alias("pred_label"),
@@ -722,8 +723,8 @@ def _ivfpq_core(
     centers = train_kmeans(unit, "unit", "vec_id", k_c, seed=7)
     if not centers:
         # no usable vectors: no cells, no candidates (fuzzer finding)
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rnk bigint"
+        return local_frame(
+            spark, [], "query_id long, neighbor_id long, rnk bigint"
         )
     d = len(centers[0])
     if d % m_sub != 0:
@@ -942,16 +943,16 @@ def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         # a 0- or 1-vector corpus has no covariance (a single mean-centered
         # vector is identically zero) — no components, not a crash
         # (fuzzer finding)
-        return spark.createDataFrame(
-            [], "vec_id long, component bigint, loading double"
+        return local_frame(
+            spark, [], "vec_id long, component bigint, loading double"
         )
     d = len(head[0]["emb"])
     if d == 0:
         # zero-width vectors (junk feed): no coordinates, no components —
         # and sql_struct_table([]) would emit an untyped array() whose
         # field access fails analysis (review finding)
-        return spark.createDataFrame(
-            [], "vec_id long, component bigint, loading double"
+        return local_frame(
+            spark, [], "vec_id long, component bigint, loading double"
         )
 
     moment_rows = pca_moment_totals(dbl).collect()

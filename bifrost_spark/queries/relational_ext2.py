@@ -1052,12 +1052,14 @@ def q_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the pair-count partial aggregation run in the probe scan's stage —
     # single input split otherwise (guide §2.5).  Spreading the narrow
     # (orderkey, partkey) projection BEFORE the self-join moves ~16 bytes/row
-    # once and parallelizes the quadratic part; both sides read the one
-    # checkpointed frame instead of scanning lineitem twice.
+    # once and parallelizes the quadratic part.  Both join sides read the
+    # one spread exchange: AQE reuses identical exchanges, so the executed
+    # plan holds one Scan parquet and one ReusedExchange, and no eager
+    # checkpoint job is needed at build time.
     l = spread(
         load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"),
         "l_orderkey",
-    ).localCheckpoint(eager=True)
+    )
     a = l.select("l_orderkey", F.col("l_partkey").alias("part_a"))
     b = l.select("l_orderkey", F.col("l_partkey").alias("part_b"))
     return (

@@ -340,6 +340,39 @@ def q_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flagged.select("doc_id").orderBy("doc_id")
 
 
+# Edge-count gate of q_triangle_count's driver regime.  Collect, driver
+# enumeration and the local result frame on a 4-core box (random graphs
+# on m/4 nodes with Zipf(0.8) endpoint weights, min of 3): 0.27 s at 20k
+# edges, 0.40 s at 40k, 1.05 s at 80k.  The co-purchase graphs stay under
+# 4k edges at sf0.001–0.1.
+_TRI_DRIVER_EDGES = 40_000
+
+
+def _driver_triangles(edges) -> dict:
+    """Per-node triangle counts of an undirected edge list (a < b), by the
+    same degree orientation as the distributed plan: each edge points from
+    its lower-(degree, id) endpoint, and a triangle u→v→w (u→w) is found
+    once, at u."""
+    from collections import Counter
+
+    deg: Counter = Counter()
+    for a, b in edges:
+        deg[a] += 1
+        deg[b] += 1
+    out: dict = {}
+    for a, b in edges:
+        src, dst = (a, b) if (deg[a], a) < (deg[b], b) else (b, a)
+        out.setdefault(src, set()).add(dst)
+    n: Counter = Counter()
+    for u, vs in out.items():
+        for v in vs:
+            for w in out.get(v, set()) & vs:
+                n[u] += 1
+                n[v] += 1
+                n[w] += 1
+    return n
+
+
 @query(
     "q_triangle_count",
     oracle="""
@@ -372,34 +405,37 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes them.  Wedge volume is Σ out-deg² with out-degrees bounded by
     orientation — a hub of degree d generates O(d) oriented wedges
     instead of O(d²) unoriented ones, which is the difference between a
-    tractable and an exploding candidate set on power-law graphs.  All
-    joins stay key-equi (shuffle-hash-able, AQE skew-splittable); each
-    triangle is found exactly once (at its minimum-degree vertex), and
-    per-node credit flows through one in-row explode."""
-    from bifrost_spark.queries._util import spread
+    tractable and an exploding candidate set on power-law graphs.  Each
+    triangle is found exactly once (at its minimum-(degree, id) vertex)
+    and credits its three vertices.
 
-    # _util.spread + one checkpointed frame for both self-join sides: the
-    # pair fan-out + count partials otherwise run in the scan's single
-    # input split (guide §2.5; the q_copurchase device — same edge shape)
-    l = spread(
-        load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"),
-        "l_orderkey",
-    ).localCheckpoint(eager=True)
-    a = l.select("l_orderkey", F.col("l_partkey").alias("a"))
-    b = l.select("l_orderkey", F.col("l_partkey").alias("b"))
+    The edge set is q_copurchase's frame, checkpointed once.  Two regimes
+    read that one checkpoint:
+
+    * at most ``_TRI_DRIVER_EDGES`` edges: the edges are collected and the
+      same orientation runs on the driver; the counts come back as one
+      Arrow-backed local frame (no further Spark job at build time);
+    * above it: the distributed plan — all joins key-equi
+      (shuffle-hash-able, AQE skew-splittable), per-node credit through
+      one in-row explode."""
+    from bifrost_spark.operators.vectors import local_frame
+    from bifrost_spark.queries.relational_ext2 import q_copurchase
+
     edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("a", "b")
-        # consumed by the degree count AND the orientation join; the edge
-        # build is a lineitem self-join + aggregation — without the
-        # checkpoint each consumer recomputed it (18 parquet scans in the
-        # executed plan of the unoriented spelling; 0 in the final plan now)
+        q_copurchase(spark, sf_dir)
+        .select(F.col("part_a").alias("a"), F.col("part_b").alias("b"))
+        # consumed by the degree count AND the orientation join (or by the
+        # driver collect): built once in either regime
         .localCheckpoint(eager=True)
     )
+    rows = edges.limit(_TRI_DRIVER_EDGES + 1).collect()
+    if len(rows) <= _TRI_DRIVER_EDGES:
+        node_t = edges.schema["a"].dataType.simpleString()
+        return local_frame(
+            spark,
+            sorted(_driver_triangles(rows).items()),
+            f"node {node_t}, n_triangles bigint NOT NULL",
+        )
     # undirected degree per node, then orient each edge low→high by
     # (degree, id) — a total order, so orientation is deterministic
     deg = (
@@ -423,7 +459,6 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.struct(F.col("deg_a").alias("d"), F.col("a").alias("n")))
             .alias("dstk"),
         )
-        .localCheckpoint(eager=True)  # consumed 3x: both wedge legs + closer
     )
     w1 = oriented.select("src", F.col("dstk").alias("vk"))
     w2 = oriented.select("src", F.col("dstk").alias("wk"))
@@ -753,17 +788,19 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a second hash constant; at real catalog sizes — millions — the
     collision rate makes this a non-event).
 
-    Shapes: one shuffle for the distinct interaction pairs, one for the
-    candidate anti join (both keyed on user), a per-user rank window over
-    ≤{D} rows.  All arithmetic is int64-exact (draws bounded by
-    |users|·A + D·B < 2^63), so membership and order are
-    engine-identical."""
+    Shapes: the interaction pairs are not deduplicated — the right side's
+    multiplicity cannot change a LEFT-ANTI join's output, so the pairs
+    stream straight into the candidate anti join's shuffle (keyed on
+    user), then a per-user rank window over ≤{D} rows.  The catalog size
+    stays one eager ``count``: folding it into the plan saved 0.045 s but
+    adds a fourth parquet scan to the executed plan.  All arithmetic is
+    int64-exact (draws bounded by |users|·A + D·B < 2^63), so membership
+    and order are engine-identical."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     inter = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("c_custkey"), F.col("l_partkey").alias("p"))
-        .distinct()
     )
     n_parts = load_table(spark, sf_dir, "part").count()
     c = load_table(spark, sf_dir, "customer").select("c_custkey")

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from bifrost_spark.operators.vectors import local_frame
 from bifrost_spark.queries.monitor_ops import (
     cusum_baseline_frames,
     cusum_daily_frame,
@@ -71,8 +72,8 @@ def batch_cusum_update(
     appended for the next batch's recovery."""
     spark = batch.sparkSession
     daily = cusum_daily_frame(batch).select("day", "m")
-    base = spark.createDataFrame([(mu0,)], "mu0 double")
-    sd = spark.createDataFrame([(s0,)], "s0 double")
+    base = local_frame(spark, [(mu0,)], "mu0 double")
+    sd = local_frame(spark, [(s0,)], "s0 double")
     rows = cusum_walk(daily, base, sd, sp0=sp0, sn0=sn0)
     return cusum_decisions(rows).join(
         rows.select(

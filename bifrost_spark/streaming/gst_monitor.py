@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from bifrost_spark.operators.vectors import local_frame
 from bifrost_spark.queries.experiment_ops import (
     _GS_LOOKS,
     gs_assignments,
@@ -94,11 +95,11 @@ def batch_gst_update(
         return None, None, None
     if anchor is None:
         anchor = bounds["dmin"]
-    d0 = spark.createDataFrame([(anchor,)], "d0 date")
+    d0 = local_frame(spark, [(anchor,)], "d0 date")
     inc = gs_look_cells(assign, d0).localCheckpoint(eager=True)
     if prior_cells:
-        prior = spark.createDataFrame(
-            prior_cells, "variant string, look bigint, n bigint, c bigint"
+        prior = local_frame(
+            spark, prior_cells, "variant string, look bigint, n bigint, c bigint"
         )
         cells = (
             inc.unionByName(prior)

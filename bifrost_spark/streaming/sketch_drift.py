@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from bifrost_spark.operators.vectors import local_frame
 from bifrost_spark.queries.scale_ops import (
     daily_value_sketch,
     score_days_against_baseline,
@@ -57,7 +58,7 @@ def fit_baseline_sketch(df: DataFrame) -> DataFrame:
         .groupBy("pv")
         .agg(F.sum("w").cast("bigint").alias("wb"))
     )
-    return df.sparkSession.createDataFrame(agg.collect(), agg.schema)
+    return local_frame(df.sparkSession, agg.collect(), agg.schema)
 
 
 def batch_sketch_drift(batch: DataFrame, baseline: DataFrame) -> DataFrame:

@@ -1,10 +1,16 @@
-"""Recompute-audit regression pins: Catalyst/AQE do NOT deduplicate
-identical subtrees consumed by two plan branches (measured round 3:
-q_tpch11 scanned lineitem twice, q_tpch18 three times, q_triangle_count
-ran 18 parquet scans, PageRank re-derived its transition graph every
-iteration).  The fixes checkpoint the small multiply-consumed frames; this
-test pins the EXECUTED plan's parquet-scan count for each fixed query so a
-refactor can't silently reintroduce the fan-out.
+"""Recompute-audit regression pins.  AQE reuses an exchange whose whole
+subtree is identical (it shows as ReusedExchange in the final plan), but
+neither Catalyst nor AQE shares subtrees that differ above the exchange:
+a frame consumed by two plan branches through different projections,
+filters or joins is recomputed per branch (measured round 3: q_tpch11
+scanned lineitem twice, q_tpch18 three times, q_triangle_count ran 18
+parquet scans, PageRank re-derived its transition graph every
+iteration).  The fixes checkpoint the small multiply-consumed frames, or
+feed both branches from one identical exchange (q_copurchase's self-join
+reads one spread exchange twice); this test pins the parquet-scan count
+of each fixed query's EXECUTED plan — the final adaptive plan, read after
+an action on the query's own QueryExecution — so a refactor can't
+silently reintroduce the fan-out.
 
 Ceilings are exact current counts (sf-independent — plan shape, not
 data).  A lower count is fine; higher fails."""
@@ -94,12 +100,19 @@ SCAN_CEILINGS = {
 }
 
 
+def executed_scans(df) -> int:
+    """Parquet scans in ``df``'s final adaptive plan.  ``count()`` would run
+    a different QueryExecution and leave this one's plan at its initial,
+    pre-reuse form; the final plan's text also carries the initial plan,
+    which is not counted."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0].count("Scan parquet")
+
+
 @pytest.mark.parametrize("name", sorted(SCAN_CEILINGS))
 def test_executed_plan_scan_count(spark, sf_dir, name):
-    df = registry.queries()[name](spark, sf_dir)
-    df.count()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Scan parquet")
+    n = executed_scans(registry.queries()[name](spark, sf_dir))
     assert n <= SCAN_CEILINGS[name], (
         f"{name}: {n} parquet scans in executed plan "
         f"(ceiling {SCAN_CEILINGS[name]}) — a multiply-consumed frame "
@@ -113,8 +126,9 @@ def test_executed_plan_scan_count(spark, sf_dir, name):
 # entries here are structural, not recompute bugs: TPC-H counts equal their
 # join-table counts (q_tpch08's 8 = its 8 relations), set/intersect sides
 # each read their input, q_integrity_check audits 4 tables.  Any query
-# whose count RISES above this table lost a shared subtree to Catalyst's
-# no-dedup rule — checkpoint it or justify it in the curated table.
+# whose count RISES above this table lost a shared subtree (branches that differ above
+# their exchange are not shared) — checkpoint it or justify it in the
+# curated table.
 FULL_SURFACE_SCANS = {
     # Round-10 additions (measured executed plans):
     "q_kaplan_meier": 1,  # one events scan through the lifetime frame
@@ -212,7 +226,7 @@ FULL_SURFACE_SCANS = {
     "q_commit_offsets": 1,
     "q_composite_report": 3,
     "q_cond_agg": 1,
-    "q_copurchase": 2,
+    "q_copurchase": 1,  # both self-join sides read one reused spread exchange
     "q_corr": 1,
     "q_cube": 1,
     "q_dataset_split": 1,
@@ -365,9 +379,7 @@ def test_full_surface_scan_counts(spark, sf_dir):
     assert not missing, f"queries with no scan baseline: {missing}"
     offenders = {}
     for name, ceiling in sorted(FULL_SURFACE_SCANS.items()):
-        df = qs[name](spark, sf_dir)
-        df.count()
-        n = df._jdf.queryExecution().executedPlan().toString().count("Scan parquet")
+        n = executed_scans(qs[name](spark, sf_dir))
         if n > ceiling:
             offenders[name] = (n, ceiling)
     assert not offenders, (

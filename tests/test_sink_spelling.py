@@ -29,6 +29,11 @@ call may take a starred comprehension of ``F.lit`` (one py4j round-trip
 per element), and no module may name the retired Column wrappers
 ``lit_vector``, ``lit_bigint_vector``, ``lit_matrix``, ``lit_struct_table``
 or their string helpers ``sql_matrix`` and ``_sql_double``.
+
+Driver-built frames have one spelling too: ``vectors.local_frame`` (rows
+plus a DDL schema, shipped as one Arrow table).  No other code under
+``bifrost_spark/`` may call ``createDataFrame(``: a list-backed frame runs
+Python-worker tasks every time it executes.
 """
 
 from __future__ import annotations
@@ -167,4 +172,21 @@ def test_plan_literals_have_one_spelling():
         for call in _calls(ast.parse(text, str(path))):
             if _name(call) in LITERAL_TABLES and any(map(_lit_comprehension, call.args)):
                 offenders.append(f"{where}:{call.lineno} builds a per-element F.lit table")
+    assert offenders == []
+
+
+def test_driver_built_frames_have_one_spelling():
+    tree = ast.parse(VECTORS.read_text(), str(VECTORS))
+    helper = next(
+        n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef) and n.name == "local_frame"
+    )
+    allowed = {id(c) for c in _calls(helper)}
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        calls = _calls(tree) if path == VECTORS else _calls(ast.parse(path.read_text(), str(path)))
+        offenders += [
+            f"{path.relative_to(PKG)}:{c.lineno} calls createDataFrame"
+            for c in calls
+            if _name(c) == "createDataFrame" and id(c) not in allowed
+        ]
     assert offenders == []

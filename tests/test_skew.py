@@ -28,6 +28,21 @@ def test_salted_join_equals_plain(spark, sf_dir):
     assert plain.count() == salted.count()
 
 
+def test_salted_join_shuffles_the_replicated_side(spark, sf_dir):
+    """The S×-replicated small side must not be broadcast: a broadcast
+    collects and hashes it on the driver, which undoes the salting."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
+    o = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
+    )
+    salted = salted_join(li, o, "l_orderkey", num_salts=8)
+    salted.collect()
+    plan = salted._jdf.queryExecution().executedPlan().toString()
+    joins = [ln for ln in plan.splitlines() if "__salt" in ln and "Join" in ln]
+    assert joins, plan
+    assert not [ln for ln in joins if "BroadcastHashJoin" in ln], joins
+
+
 def test_salted_join_hot_keys_equals_plain(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     o = load_table(spark, sf_dir, "orders").select(
