@@ -159,12 +159,37 @@ def local_frame(spark, rows, schema) -> DataFrame:
     under ``schema`` (a DDL string or a StructType), shipped to the JVM as
     one Arrow table.  A list-backed ``createDataFrame`` unpickles its rows
     in Python-worker tasks (one per partition) every time the frame runs;
-    the Arrow-backed frame runs JVM-only (50 rows: 33 ms against 238 ms)."""
+    the Arrow-backed frame runs JVM-only (50 rows: 33 ms against 238 ms).
+
+    A ``timestamp`` (session-local) field anywhere in ``schema`` raises
+    ``ValueError``: Arrow would read a naive ``datetime`` as UTC where a
+    list-backed ``createDataFrame`` reads it as local time, so the frame
+    would shift silently.  ``timestamp_ntz`` and ``date`` are unaffected."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType, _parse_datatype_string
+    from pyspark.sql.types import (
+        ArrayType,
+        MapType,
+        StructType,
+        TimestampType,
+        _parse_datatype_string,
+    )
 
     struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+
+    def local_tz(t) -> bool:
+        if isinstance(t, StructType):
+            return any(local_tz(f.dataType) for f in t.fields)
+        if isinstance(t, ArrayType):
+            return local_tz(t.elementType)
+        if isinstance(t, MapType):
+            return local_tz(t.keyType) or local_tz(t.valueType)
+        return isinstance(t, TimestampType)
+
+    if local_tz(struct):
+        raise ValueError(
+            f"local_frame refuses session-local timestamp fields: {struct.simpleString()}"
+        )
     arrow = to_arrow_schema(struct)
     cols = [
         pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)

@@ -252,6 +252,28 @@ def test_lit_builders_reject_non_finite():
             sql_struct_table([[1.0, bad]], "cell", "c")
 
 
+def test_local_frame_matches_list_backed_frame(spark):
+    """local_frame gives the rows and the schema a list-backed
+    createDataFrame gives; a session-local timestamp field (which Arrow
+    would read as UTC, createDataFrame as local time) is refused."""
+    import datetime as dt
+
+    from bifrost_spark.operators.vectors import local_frame
+
+    schema = "k bigint, x double, s string, v array<double>, d date, t timestamp_ntz"
+    rows = [
+        (1, -0.0, "a", [1.5, 2.0], dt.date(2024, 2, 29), dt.datetime(2024, 1, 1, 12, 30)),
+        (2, None, None, [], None, None),
+    ]
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    for bad in ("t timestamp", "r struct<t: timestamp>", "a array<timestamp>"):
+        with pytest.raises(ValueError, match="timestamp"):
+            local_frame(spark, [(None,)], bad)
+
+
 def _build_simhash64(spark):
     from bifrost_spark.operators.dedup import simhash64
 

@@ -100,14 +100,44 @@ SCAN_CEILINGS = {
 }
 
 
+_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+_EMPTY_RELATION_RULE = (
+    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+)
+
+
 def executed_scans(df) -> int:
     """Parquet scans in ``df``'s final adaptive plan.  ``count()`` would run
     a different QueryExecution and leave this one's plan at its initial,
-    pre-reuse form; the final plan's text also carries the initial plan,
-    which is not counted."""
-    df.collect()
+    pre-reuse form.  Every adaptive plan in the text — the outer one and
+    each subquery's, printed inside its parent's final plan — carries an
+    ``== Initial Plan ==`` block after its final plan; each such block
+    (the header and every line at or right of its column) is dropped, and
+    the scans in all final plans are counted.  AQE's empty-relation rule
+    is off for the action: it drops a stage that ran and came back empty
+    from the final plan (q_join_full's supplier side at sf0.001), and the
+    pins count the scans a query runs."""
+    conf = df.sparkSession.conf
+    prior = conf.get(_EXCLUDED_RULES, None)
+    conf.set(_EXCLUDED_RULES, _EMPTY_RELATION_RULE)
+    try:
+        df.collect()
+    finally:
+        if prior is None:
+            conf.unset(_EXCLUDED_RULES)
+        else:
+            conf.set(_EXCLUDED_RULES, prior)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan.split("== Initial Plan ==")[0].count("Scan parquet")
+    n, initial_col = 0, None
+    for line in plan.splitlines():
+        node = line.lstrip(" :|+-")
+        col = len(line) - len(node)
+        if initial_col is not None and col >= initial_col:
+            continue
+        initial_col = col if node.startswith("== Initial Plan ==") else None
+        if initial_col is None:
+            n += node.count("Scan parquet")
+    return n
 
 
 @pytest.mark.parametrize("name", sorted(SCAN_CEILINGS))
@@ -385,3 +415,13 @@ def test_full_surface_scan_counts(spark, sf_dir):
     assert not offenders, (
         f"scan counts rose above baseline (count, ceiling): {offenders}"
     )
+
+
+@pytest.mark.parametrize("name", ["q_subquery_scalar", "q_join_full"])
+def test_executed_scans_counts_every_scan_that_runs(spark, sf_dir, name):
+    """q_subquery_scalar: the subquery's adaptive plan (with its own Final
+    and Initial blocks) prints inside the outer final plan, ahead of the
+    outer customer scan; both scans count, neither initial plan does, and
+    the pushed filter's ReusedSubquery adds nothing.  q_join_full: the
+    supplier side is empty at sf0.001, and its scan still counts."""
+    assert executed_scans(registry.queries()[name](spark, sf_dir)) == 2

@@ -117,18 +117,7 @@ def test_jaccard_ppjoin_matches_bruteforce_pairs(spark, docs):
 # ---------------------------------------------------------------------------
 
 
-@pytest.fixture(params=["driver", "distributed"])
-def triangle_regime(request, monkeypatch):
-    """q_triangle_count's two regimes: the default edge gate keeps the test
-    graphs on the driver; a gate of 0 forces the distributed plan."""
-    if request.param == "distributed":
-        from bifrost_spark.queries import scale_ops
-
-        monkeypatch.setattr(scale_ops, "_TRI_DRIVER_EDGES", 0)
-    return request.param
-
-
-def test_triangle_count_matches_direct_enumeration(spark, lineitem, triangle_regime):
+def test_triangle_count_matches_direct_enumeration(spark, lineitem):
     pairs: Counter = Counter()
     for _, grp in lineitem.groupby("l_orderkey"):
         ps = sorted(set(grp.l_partkey))
@@ -166,9 +155,9 @@ def test_triangle_count_matches_direct_enumeration(spark, lineitem, triangle_reg
     assert {r["node"]: r["n_triangles"] for r in rows} == dict(tri_per_node)
 
 
-def test_triangle_count_without_triangles(spark, tmp_path, triangle_regime):
+def test_triangle_count_without_triangles(spark, tmp_path):
     """A path graph 1-2-3 (each edge supported by two orders) closes no
-    triangle: no rows, and the same schema in both regimes."""
+    triangle: no rows, and the query's schema."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
