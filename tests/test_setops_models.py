@@ -117,7 +117,18 @@ def test_jaccard_ppjoin_matches_bruteforce_pairs(spark, docs):
 # ---------------------------------------------------------------------------
 
 
-def test_triangle_count_matches_direct_enumeration(spark, lineitem):
+@pytest.fixture(params=["driver", "distributed"])
+def triangle_regime(request, monkeypatch):
+    """q_triangle_count's two regimes: the default edge gate keeps the test
+    graphs on the driver; a gate of 0 forces the distributed plan."""
+    if request.param == "distributed":
+        from bifrost_spark.queries import scale_ops
+
+        monkeypatch.setattr(scale_ops, "_TRI_DRIVER_EDGES", 0)
+    return request.param
+
+
+def test_triangle_count_matches_direct_enumeration(spark, lineitem, triangle_regime):
     pairs: Counter = Counter()
     for _, grp in lineitem.groupby("l_orderkey"):
         ps = sorted(set(grp.l_partkey))
@@ -155,9 +166,9 @@ def test_triangle_count_matches_direct_enumeration(spark, lineitem):
     assert {r["node"]: r["n_triangles"] for r in rows} == dict(tri_per_node)
 
 
-def test_triangle_count_without_triangles(spark, tmp_path):
+def test_triangle_count_without_triangles(spark, tmp_path, triangle_regime):
     """A path graph 1-2-3 (each edge supported by two orders) closes no
-    triangle: no rows, and the query's schema."""
+    triangle: no rows, and the same schema in both regimes."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
